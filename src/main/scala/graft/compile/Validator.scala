@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dsl._
-import graft.series.{Decomposition, Drift, SeriesKernels}
+import graft.series.SeriesKernels
 
 /** Compiles a constraint suite to Catalyst plans and evaluates it with a
   * fixed small number of passes, independent of the number of constraints
@@ -24,7 +24,10 @@ import graft.series.{Decomposition, Drift, SeriesKernels}
   *  pass 4  anti-joins, one per referenced dimension (broadcast by
   *          default; shuffled sort-merge when `broadcastDim = false`
   *          marks the dim too large to ship to executors);
-  *  pass 5  turn-rate drift: bucket → decompose → residual/PSI/KS verdicts.
+  *  pass 5  turn-rate drift: one per-conversation kernel (bucket census →
+  *          decompose → residual/PSI/KS) into one persisted frame;
+  *  pass 6+ the remaining families, numbered in source order by the
+  *          `// ---- pass N` headers in [[validate]].
   *
   * Verdicts are per conversation for row/series constraints (the north
   * rule's per-partition pass/fail) and global for aggregate constraints.
@@ -414,7 +417,7 @@ object Validator {
           stddev_samp(wx).as(s"__corrsx__${x}__${y}"),
           stddev_samp(wy).as(s"__corrsy__${x}__${y}")) } ++
       // cast("timestamp") first: unix_micros rejects TIMESTAMP_NTZ; the
-      // NTZ→TS cast applies the SESSION tz, and pass 11b interprets asOf
+      // NTZ→TS cast applies the SESSION tz, and pass 14b interprets asOf
       // in that same zone, so the offset cancels and lag is the plain
       // wall-clock difference in any session zone — the Sessions.withGap
       // idiom
@@ -890,7 +893,7 @@ object Validator {
         Seq(explodeViolations(aug, checks))
       }
 
-    // ---- pass 9: functional dependencies (one hash aggregation each) --------
+    // ---- pass 8: functional dependencies (one hash aggregation each) --------
     // groupBy determinant → count(distinct dependent), partial-agg
     // friendly; a group with >1 dependent value is one violation row with
     // the census observed. Null determinant components are skipped (a null
@@ -912,7 +915,7 @@ object Validator {
             lit(c.severity).as("severity"))
     }
 
-    // ---- pass 8: point-in-time referential integrity ------------------------
+    // ---- pass 9: point-in-time referential integrity ------------------------
     // the as-of join resolves each turn against the newest snapshot at or
     // before its ts; an unresolved marker is the violation. Fact side is
     // pruned to 4 scalar columns before either tier (the shuffle tier
@@ -943,7 +946,7 @@ object Validator {
             lit(c.severity).as("severity"))
     }
 
-    // ---- pass 9: distribution drift vs a reference table --------------------
+    // ---- pass 10: distribution drift vs a reference table --------------------
     // PSI of the validated column against a blessed baseline dimension —
     // the snapshot-regression check. One quantile pass over the baseline,
     // a broadcast of its bins−1 edges, a codegen'd bin lambda over the
@@ -1029,7 +1032,7 @@ object Validator {
           (violationDf, verdictDf)
       }
 
-    // ---- pass 10: duplicate-rate bound ---------------------------------------
+    // ---- pass 11: duplicate-rate bound ---------------------------------------
     // (n − distinct)/n over non-null values of the column, the declarative
     // face of exact/normalized dedup. Rows reduce map-side to a 16-byte
     // digest (the value itself never rides the shuffle); the exact tier is
@@ -1074,7 +1077,7 @@ object Validator {
           (violationDf, verdictDf)
       }
 
-    // ---- pass 10c: time-bucket coverage ---------------------------------------
+    // ---- pass 12: time-bucket coverage ---------------------------------------
     // one hash aggregation on the truncated bucket (only the bucket
     // timestamp rides the exchange, map-side combined); the census is
     // collected driver-side — bounded by span/bucket, the constraint's
@@ -1169,7 +1172,7 @@ object Validator {
           (violationDf, verdictDf)
       }
 
-    // ---- pass 10b: near-duplicate rate bound ----------------------------------
+    // ---- pass 13: near-duplicate rate bound ----------------------------------
     // the full minhash → LSH banding → exact-Jaccard-verify chain (the
     // audited q64 shape) with the suite's (key, ord) composite as the doc
     // id, digest-reduced map-side so the key text never rides the dedup
@@ -1249,7 +1252,7 @@ object Validator {
           (violationDf, verdictDf)
       }
 
-    // ---- pass 11: correlation bound (reads the fused stats row — no job) ----
+    // ---- pass 14: correlation bound (reads the fused stats row — no job) ----
     val corrResults: Seq[(Option[DataFrame], DataFrame)] =
       check.constraints.collect {
         case c @ CorrelationBetween(x, y, lo, hi) =>
@@ -1278,7 +1281,7 @@ object Validator {
           (violationDf, verdictDf)
       }
 
-    // ---- pass 11b: freshness bound (reads the fused stats row — no job) -----
+    // ---- pass 14b: freshness bound (reads the fused stats row — no job) -----
     val staleResults: Seq[(Option[DataFrame], DataFrame)] =
       check.constraints.collect {
         case c @ MaxStaleness(columnName, _, maxLag) =>
@@ -1313,7 +1316,7 @@ object Validator {
           (violationDf, verdictDf)
       }
 
-    // ---- pass 11c: language-mix bound (reads the fused stats row — no job) --
+    // ---- pass 14c: language-mix bound (reads the fused stats row — no job) --
     val langResults: Seq[(Option[DataFrame], DataFrame)] =
       check.constraints.collect {
         case c @ LanguageShare(columnName, lang, lo, hi) =>
@@ -1371,7 +1374,7 @@ object Validator {
         (violationDf, verdictDf)
       }
 
-    // ---- pass 12: entropy bound ---------------------------------------------
+    // ---- pass 15: entropy bound ---------------------------------------------
     // one hash aggregation per constraint (groupBy value → count, map-side
     // combined — only distinct values ride the exchange), then H = ln N −
     // Σ n·ln n / N as a one-row reduction. Meant for category columns.
@@ -1411,7 +1414,7 @@ object Validator {
           (violationDf, verdictDf)
       }
 
-    // ---- pass 12b: uniqueness / distinctness ratio bounds ----------------------
+    // ---- pass 15b: uniqueness / distinctness ratio bounds ----------------------
     def keyCensusRatio(columns: Seq[String]): (Long, Long, Long) = {
       val row = ratioCensusFrame(df, columns).collect()(0)
       if (row.isNullAt(0)) (0L, 0L, 0L)
@@ -1449,7 +1452,7 @@ object Validator {
           ratioResult(c, columns, lo, hi, "distinctness", tot, groups)
       }
 
-    // ---- pass 13: mutual-information bound ------------------------------------
+    // ---- pass 16: mutual-information bound ------------------------------------
     // one hash aggregation per constraint (groupBy (x,y) → count, map-side
     // combined); marginals and the MI sum are window/aggregate passes over
     // the O(distinct pairs) census, never the fact table. ANSI-safe: every
@@ -1757,71 +1760,30 @@ object Validator {
     mismatches ++ extras
   }
 
-  /** Turn-rate drift: bucket per (conv, window(ts)) → decompose → residual
-    * anomalies + per-conversation PSI/KS between first and second half.
+  /** Turn-rate drift: one fused per-conversation kernel
+    * ([[SeriesKernels.turnRateDrift]]: bucket census → decompose →
+    * residual flags + PSI/KS between first and second half) into ONE
+    * persisted frame; violations and verdicts are two projections of it.
+    * The null-key conversation verdicts under the "(null)" sentinel, as
+    * in the per-conversation verdicts.
     */
   private def turnRateDrift(df: DataFrame, check: Check, c: TurnRateDrift)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val key = check.keyCol
-    // the bucketed series is tiny relative to the fact table (convs x
-    // buckets) but feeds four consumers (decomposition, PSI, KS, bucket
-    // counts) — persist it so the fact table is scanned ONCE for drift
-    val series = df
-      .groupBy(col(key), window(col(check.tsCol), c.bucket).as("w"))
-      .agg(count(lit(1)).as("n_turns"))
-      .select(col(key), col("w.start").as("bucket_ts"), col("n_turns"))
-      .withColumn("idx",
-        (row_number().over(Window.partitionBy(col(key)).orderBy(col("bucket_ts"))) - 1))
+    val drift = SeriesKernels.turnRateDrift(df, check.keyCol, check.tsCol, c)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val decomposed = c.method match {
-      case "stl" =>
-        SeriesKernels.stl(series.withColumn("n_turns", col("n_turns").cast("double")),
-          key, "idx", "n_turns", c.period, c.seasonal)
-      case "classical" =>
-        Decomposition.additive(series.withColumn("n_turns", col("n_turns").cast("double")),
-          "n_turns", c.period, Seq(key), Seq("idx"))
-      case other => throw new IllegalArgumentException(s"unknown method $other")
-    }
-
-    val anomalies = Decomposition.residualAnomalies(
-      decomposed, Seq(key), c.residMethod, c.residThreshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val violations = anomalies.select(
+    val violations = drift.where(col("turn_idx").isNotNull).select(
       lit(c.name).as("constraint"),
-      col(key).cast("string").as("conv_id"),
-      col("idx").cast("int").as("turn_idx"),
+      col("conv_id"),
+      col("turn_idx"),
       lit("n_turns").as("column"),
       col("resid").cast("string").as("observed"),
       lit(s"${c.residMethod}@${c.residThreshold}").as("bound"),
       lit(c.severity).as("severity"))
-
-    // PSI/KS: first vs second half of each conversation's buckets
-    val wKey = Window.partitionBy(col(key))
-    val sided = series
-      .withColumn("__max_idx", max(col("idx")).over(wKey))
-      .withColumn("side", when(col("idx") * 2 <= col("__max_idx"), "baseline")
-        .otherwise("current"))
-    val psiDf = Drift.psi(sided, "n_turns", "side", Seq(key))
-    val ksDf = Drift.ks(sided, "n_turns", "side", Seq(key))
-    val residCounts = anomalies.groupBy(col(key))
-      .agg(count(lit(1)).as("resid_anomalies"))
-    val bucketCounts = series.groupBy(col(key)).agg(count(lit(1)).as("rows"))
-
-    val verdicts = bucketCounts
-      .join(psiDf, Seq(key), "left")
-      .join(ksDf, Seq(key), "left")
-      .join(residCounts, Seq(key), "left")
-      .na.fill(0L, Seq("resid_anomalies"))
-      .withColumn("pass",
-        col("resid_anomalies") === 0 &&
-          coalesce(col("psi") <= c.psiThreshold, lit(true)) &&
-          coalesce(col("ks") <= c.ksThreshold, lit(true)))
-      .select(col(key).cast("string").as("partition_key"),
-        lit(c.name).as("constraint"), col("pass"), col("rows"),
-        col("resid_anomalies").as("violations"),
-        (col("resid_anomalies") / col("rows")).as("violation_rate"))
-
-    (violations, verdicts, Seq(series, anomalies))
+    val verdicts = drift.where(col("pass").isNotNull).select(
+      coalesce(col("conv_id"), lit("(null)")).as("partition_key"),
+      lit(c.name).as("constraint"), col("pass"), col("rows"),
+      col("violations"),
+      (col("violations") / col("rows")).as("violation_rate"))
+    (violations, verdicts, Seq(drift))
   }
 }

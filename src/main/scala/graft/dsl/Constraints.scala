@@ -116,8 +116,10 @@ final case class MeanBetween(column: String, lo: Double, hi: Double)
 final case class StddevBetween(column: String, lo: Double, hi: Double)
   extends Constraint { val name = s"stddev($column)" }
 
-/** Quantile bound; `approx=true` rides the mergeable t-digest (the 100 TB
-  * path), false uses exact percentile (test-scale parity).
+/** Quantile bound. A one-shot validate computes it in the fused stats
+  * pass: `approx=true` with `percentile_approx` (accuracy 10000), false
+  * with exact `percentile` (test-scale parity). A resumable run judges it
+  * from the merged per-slice t-digests (StatsState) whatever `approx` says.
   */
 final case class QuantileBetween(column: String, q: Double, lo: Double,
     hi: Double, approx: Boolean = true)

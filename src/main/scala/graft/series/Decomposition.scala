@@ -27,6 +27,38 @@ object Decomposition {
       keyCols: Seq[String], orderCols: Seq[String]): DataFrame =
     classical(df, valueCol, period, keyCols, orderCols, multiplicative = true)
 
+  /** Array twin of [[additive]] for one series in index order, with the
+    * window plan's summation order, so every component carries the same
+    * bits: phase means accumulate in index order, the grand mean in phase
+    * order. NaN marks an undefined component (SQL null).
+    */
+  def additive(y: Array[Double], period: Int): Stl.Result = {
+    require(period >= 2, "period must be >= 2")
+    val n = y.length
+    val h = period / 2
+    val trend = Array.tabulate(n) { i =>
+      if (i - h < 0 || i + h >= n) Double.NaN
+      else {
+        var s = 0.0
+        var j = i - h
+        while (j <= i + h) { s += y(j); j += 1 }
+        if (period % 2 == 1) s / period
+        else (s - (y(i - h) + y(i + h)) * 0.5) / period
+      }
+    }
+    val detrended = Array.tabulate(n)(i => y(i) - trend(i))
+    val phaseMean = Array.tabulate(period) { p =>
+      val xs = (p until n by period).map(detrended).filterNot(_.isNaN)
+      if (xs.isEmpty) Double.NaN else xs.foldLeft(0.0)(_ + _) / xs.size
+    }
+    val defined = phaseMean.filterNot(_.isNaN)
+    val grand = if (defined.isEmpty) Double.NaN
+      else defined.foldLeft(0.0)(_ + _) / defined.length
+    val seasonal = Array.tabulate(n)(i => phaseMean(i % period) - grand)
+    Stl.Result(trend, seasonal,
+      Array.tabulate(n)(i => detrended(i) - seasonal(i)))
+  }
+
   private def classical(df: DataFrame, valueCol: String, period: Int,
       keyCols: Seq[String], orderCols: Seq[String],
       multiplicative: Boolean): DataFrame = {
@@ -123,46 +155,58 @@ object Decomposition {
       .drop("var_trend", "var_seasonal")
   }
 
-  /** T5: residual anomaly rows (reference src/decomposition.py:140-181).
-    * method ∈ {iqr, zscore, threshold}; thresholds match the reference
-    * defaults (iqr k, zscore on SAMPLE std, abs threshold). Quantiles are
-    * exact per-series (small series) via percentile over the key group —
-    * one extra aggregation + re-join by key (both shuffles on the key).
+  /** T5: residual anomaly flags for one series (reference
+    * src/decomposition.py:140-181). method ∈ {iqr, zscore, threshold};
+    * `threshold` is the iqr k, the zscore bound on SAMPLE std, or the abs
+    * threshold. NaN marks an undefined residual: never flagged, and
+    * left out of the quartiles and moments. The quartiles are Spark's
+    * exact `percentile` ([[Drift.exactPercentile]]); the moments follow
+    * `avg`/`stddev_samp`'s update order.
     */
-  def residualAnomalies(decomposed: DataFrame, keyCols: Seq[String],
-      method: String = "iqr", threshold: Double = 2.0): DataFrame = {
-    val key = keyCols.map(col)
+  def residualFlags(resid: Array[Double], method: String,
+      threshold: Double): Array[Boolean] = {
+    val defined = resid.filterNot(_.isNaN)
     method match {
       case "iqr" =>
-        val q = decomposed.where(col("resid").isNotNull).groupBy(key: _*).agg(
-          expr("percentile(resid, 0.25)").as("rq1"),
-          expr("percentile(resid, 0.75)").as("rq3"))
-        // fence comparisons carry a 1e-9-relative tolerance: with a
-        // degenerate IQR (constant-ish residuals) the fence EQUALS the
-        // common residual value and double-precision noise between rows
-        // (different trend-window summation groupings) would otherwise
-        // decide flags — an anomaly within 1e-9 of the fence is numerical
-        // fiction, not signal
-        val tol = lit(1e-9) *
-          greatest(abs(col("lo")), abs(col("hi")), lit(1.0))
-        decomposed.join(q, keyCols)
-          .withColumn("lo", col("rq1") - lit(threshold) * (col("rq3") - col("rq1")))
-          .withColumn("hi", col("rq3") + lit(threshold) * (col("rq3") - col("rq1")))
-          .where(col("resid") < col("lo") - tol || col("resid") > col("hi") + tol)
-          .drop("rq1", "rq3")
+        if (defined.isEmpty) resid.map(_ => false)
+        else {
+          val sorted = defined.sorted
+          val q1 = Drift.exactPercentile(sorted, 0.25)
+          val q3 = Drift.exactPercentile(sorted, 0.75)
+          val lo = q1 - threshold * (q3 - q1)
+          val hi = q3 + threshold * (q3 - q1)
+          // fence comparisons carry a 1e-9-relative tolerance: with a
+          // degenerate IQR (constant-ish residuals) the fence EQUALS the
+          // common residual value and double-precision noise between rows
+          // (different trend-window summation groupings) would otherwise
+          // decide flags — an anomaly within 1e-9 of the fence is
+          // numerical fiction, not signal
+          val tol = 1e-9 * math.max(math.max(math.abs(lo), math.abs(hi)), 1.0)
+          resid.map(r => r < lo - tol || r > hi + tol)
+        }
       case "zscore" =>
-        val s = decomposed.where(col("resid").isNotNull).groupBy(key: _*).agg(
-          avg(col("resid")).as("rmean"), stddev_samp(col("resid")).as("rstd"))
-        decomposed.join(s, keyCols)
-          // constant residuals (a perfectly periodic series) have rstd = 0:
-          // null rz, nothing flagged — unguarded this is an ANSI
-          // DIVIDE_BY_ZERO crash, and a perfect fit is not an anomaly
-          .withColumn("rz", when(col("rstd") > 0,
-            abs((col("resid") - col("rmean")) / col("rstd"))))
-          .where(col("rz") > threshold)
-          .drop("rmean", "rstd")
+        var n = 0.0
+        var sum = 0.0
+        var mean = 0.0
+        var m2 = 0.0
+        defined.foreach { r =>
+          n += 1.0
+          sum += r
+          val delta = r - mean
+          val deltaN = delta / n
+          mean += deltaN
+          m2 += delta * (delta - deltaN)
+        }
+        val std = if (n > 1.0) math.sqrt(m2 / (n - 1.0)) else 0.0
+        // constant residuals (a perfectly periodic series) have std = 0:
+        // nothing flagged — a perfect fit is not an anomaly
+        if (!(std > 0)) resid.map(_ => false)
+        else {
+          val avg = sum / n
+          resid.map(r => math.abs((r - avg) / std) > threshold)
+        }
       case "threshold" =>
-        decomposed.where(abs(col("resid")) > threshold)
+        resid.map(r => math.abs(r) > threshold)
       case other => throw new IllegalArgumentException(s"unknown method: $other")
     }
   }

@@ -17,6 +17,11 @@ import graft.agg.Sketches
   */
 object Drift {
 
+  // PSI's bin count and probability floor; `psi`/`psiFromCensus` take them
+  // as defaults and `psiOf` uses them as they are
+  private val DefaultBins = 10
+  private val DefaultEps = 1e-4
+
   /** PSI = Σ (p_i - q_i) · ln(p_i / q_i) over equal-frequency bins derived
     * from the baseline side. Input: one DataFrame with `sideCol` ∈
     * {'baseline','current'}; output: one row per key with psi.
@@ -29,10 +34,10 @@ object Drift {
   /** Shared per-(key, value) side census: baseline/current counts per
     * DISTINCT value. Both [[psi]] and [[ks]] derive from this ONE
     * map-side-combined aggregation, so when a caller evaluates both over
-    * the same input (turn-rate drift, DistributionDrift) the identical
-    * census Exchange subtree is deduplicated by ReuseExchange and the raw
-    * rows are scanned once (guide §2.3 "aggregate before you shuffle" —
-    * everything downstream runs on the distinct-value census, not rows).
+    * the same input (DistributionDrift) the identical census Exchange
+    * subtree is deduplicated by ReuseExchange and the raw rows are scanned
+    * once (guide §2.3 "aggregate before you shuffle" — everything
+    * downstream runs on the distinct-value census, not rows).
     */
   def sideCensus(df: DataFrame, valueCol: String, sideCol: String,
       keyCols: Seq[String]): DataFrame =
@@ -41,7 +46,8 @@ object Drift {
         sum((col(sideCol) === "current").cast("long")).as("__cc"))
 
   def psi(df: DataFrame, valueCol: String, sideCol: String,
-      keyCols: Seq[String], bins: Int = 10, eps: Double = 1e-4): DataFrame =
+      keyCols: Seq[String], bins: Int = DefaultBins,
+      eps: Double = DefaultEps): DataFrame =
     psiFromCensus(sideCensus(df, valueCol, sideCol, keyCols), keyCols,
       bins, eps)
 
@@ -50,7 +56,7 @@ object Drift {
     * the census once instead of rescanning both sides per action.
     */
   def psiFromCensus(census: DataFrame, keyCols: Seq[String],
-      bins: Int = 10, eps: Double = 1e-4): DataFrame = {
+      bins: Int = DefaultBins, eps: Double = DefaultEps): DataFrame = {
     val key = keyCols.map(col)
     val qs = (1 until bins).map(i => i.toDouble / bins)
     // exact WEIGHTED percentile over the census ≡ percentile over the raw
@@ -131,6 +137,71 @@ object Drift {
       .groupBy(key: _*)
       .agg(max(col("d")).as("ks"))
   }
+
+  /** Spark's exact `percentile` over an ascending array, ported literally
+    * so array kernels reproduce the aggregate's bits: at pos = (n−1)·p,
+    * `(hi − pos)·v_lo + (pos − lo)·v_hi` with lo/hi = floor/ceil(pos),
+    * and no interpolation when pos is integral or both ranks hold the
+    * same value. `sorted` must be non-empty.
+    */
+  def exactPercentile(sorted: Array[Double], p: Double): Double = {
+    val pos = (sorted.length - 1).toLong * p
+    val lo = math.floor(pos).toLong
+    val hi = math.ceil(pos).toLong
+    val vLo = sorted(lo.toInt)
+    if (hi == lo) return vLo
+    val vHi = sorted(hi.toInt)
+    if (vHi == vLo) vLo
+    else (hi - pos) * vLo + (pos - lo) * vHi
+  }
+
+  /** Array twin of [[psi]] at its default 10 bins for one key:
+    * baseline-quantile bin edges via [[exactPercentile]], the same 1e-4
+    * eps clamping and natural log (`StrictMath`, as Spark's `log`). None
+    * when either side is empty.
+    */
+  def psiOf(baseline: Array[Double], current: Array[Double]): Option[Double] =
+    if (baseline.isEmpty || current.isEmpty) None
+    else {
+      val bins = DefaultBins
+      val eps = DefaultEps
+      val sorted = baseline.sorted
+      val edges = (1 until bins).map(i => exactPercentile(sorted, i.toDouble / bins))
+      def binOf(v: Double) = edges.count(v > _)
+      val nBase = new Array[Long](bins)
+      val nCur = new Array[Long](bins)
+      baseline.foreach(v => nBase(binOf(v)) += 1)
+      current.foreach(v => nCur(binOf(v)) += 1)
+      val tBase = baseline.length.toDouble
+      val tCur = current.length.toDouble
+      // a bin empty on both sides adds (eps - eps)·ln 1 = 0
+      Some((0 until bins).map { b =>
+        val p = math.max(nBase(b) / tBase, eps)
+        val q = math.max(nCur(b) / tCur, eps)
+        (p - q) * StrictMath.log(p / q)
+      }.sum)
+    }
+
+  /** Array twin of [[ks]] for one key: the tie-correct two-sample D, both
+    * empirical CDFs evaluated after every distinct value. None when either
+    * side is empty.
+    */
+  def ksOf(baseline: Array[Double], current: Array[Double]): Option[Double] =
+    if (baseline.isEmpty || current.isEmpty) None
+    else {
+      val b = baseline.sorted
+      val c = current.sorted
+      var i = 0
+      var j = 0
+      var d = 0.0
+      while (i < b.length || j < c.length) {
+        val v = if (j == c.length || (i < b.length && b(i) <= c(j))) b(i) else c(j)
+        while (i < b.length && b(i) == v) i += 1
+        while (j < c.length && c(j) == v) j += 1
+        d = math.max(d, math.abs(i.toDouble / b.length - j.toDouble / c.length))
+      }
+      Some(d)
+    }
 
   /** Sketch-based KS for the 100 TB path: one t-digest per side (mergeable,
     * checkpointable), D approximated as max |rank_base(x) - rank_cur(x)|

@@ -334,4 +334,33 @@ class PlanSpec extends GraftSuite {
     assert(folds <= 1,
       s"langId fold instantiated $folds times for 3 lang bounds on one column")
   }
+
+  test("turn-rate drift: no join, at most 2 exchanges (census + by-conversation group)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val r = graft.compile.Validator.validate(
+        graft.sources.Tables.transcripts(spark, sfTiny),
+        graft.dsl.Check("t", Seq(graft.dsl.TurnRateDrift(bucket = "1 hour",
+          period = 24, residThreshold = 3.0))))
+      r.violations.collect()
+      r.verdicts.collect()
+      // every plan the validate runs: both outputs plus, recursively, the
+      // cached plans behind their InMemoryTableScans (each counted once)
+      def reach(p: SparkPlan): Seq[SparkPlan] = p +: p.collect {
+        case s: InMemoryTableScanExec => s.relation.cachedPlan
+      }.flatMap(reach)
+      val plans = (reach(r.violations.queryExecution.executedPlan) ++
+        reach(r.verdicts.queryExecution.executedPlan))
+        .distinctBy(System.identityHashCode)
+      val joins = plans.flatMap(_.collect { case j: BaseJoinExec => j.nodeName })
+      assert(joins.isEmpty, s"joins in the drift plan: $joins")
+      val exchanges = plans.map(_.collect { case e: ShuffleExchangeExec => e }.size).sum
+      assert(exchanges <= 2, s"$exchanges exchanges:\n${plans.mkString("\n")}")
+      r.unpersistAll()
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
 }

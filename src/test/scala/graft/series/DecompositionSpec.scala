@@ -93,11 +93,10 @@ class DecompositionSpec extends GraftSuite {
   }
 
   test("zscore anomalies on a perfect fit (constant residuals): none, no crash") {
-    // pure seasonal+trend series -> residuals all ~0 with rstd = 0
-    val df = (0 until 84).map(i => ("k", i, 5.0)).toDF("key", "i", "y")
-    val dec = Decomposition.additive(df, "y", 7, Seq("key"), Seq("i"))
-    val found = Decomposition.residualAnomalies(dec, Seq("key"), "zscore", 3.0)
-    assert(found.count() == 0)
+    // pure seasonal+trend series -> residuals all ~0 with std = 0
+    val dec = Decomposition.additive(Array.fill(84)(5.0), 7)
+    val flags = Decomposition.residualFlags(dec.resid, "zscore", 3.0)
+    assert(!flags.contains(true))
   }
 
   test("strengths: strong seasonality detected, clamped [0,1]") {
@@ -115,16 +114,43 @@ class DecompositionSpec extends GraftSuite {
   test("residual anomalies: injected spikes found via iqr and zscore") {
     val n = 140
     val spikes = Set(40, 90)
-    val df = (0 until n).map(i =>
-      ("k", i, 2.0 + math.sin(2 * math.Pi * i / 7) +
-        (if (spikes(i)) 25.0 else 0.0)))
-      .toDF("key", "i", "y")
-    val dec = Decomposition.additive(df, "y", 7, Seq("key"), Seq("i"))
+    val y = Array.tabulate(n)(i =>
+      2.0 + math.sin(2 * math.Pi * i / 7) + (if (spikes(i)) 25.0 else 0.0))
+    val dec = Decomposition.additive(y, 7)
     for (m <- Seq("iqr", "zscore")) {
-      val found = Decomposition.residualAnomalies(dec, Seq("key"), m,
-          if (m == "iqr") 2.0 else 3.0)
-        .select("i").as[Int].collect().toSet
+      val flags = Decomposition.residualFlags(dec.resid, m,
+        if (m == "iqr") 2.0 else 3.0)
+      val found = flags.indices.filter(flags).toSet
       assert(spikes.subsetOf(found), s"$m missed spikes: $found")
+    }
+  }
+
+  test("residual flags: undefined (NaN) residuals are never flagged nor counted") {
+    val resid = Array(Double.NaN, 0.0, 0.1, -0.1, 0.05, 9.0, Double.NaN)
+    for (m <- Seq("iqr", "zscore", "threshold")) {
+      val flags = Decomposition.residualFlags(resid, m, 1.5)
+      assert(flags.indices.filter(flags) == Seq(5), s"$m: ${flags.toSeq}")
+    }
+    assert(!Decomposition.residualFlags(Array.fill(5)(Double.NaN), "iqr", 2.0)
+      .contains(true))
+  }
+
+  test("array twin of additive: same components, bit for bit, as the window plan") {
+    // integer counts with a burst and a short tail: the turn-rate shape
+    for (p <- Seq(6, 7)) {
+      val y = Array.tabulate(47)(i => ((i * 7919) % 5 + (if (i == 20) 30 else 2)).toDouble)
+      val rows = Decomposition.additive(
+          y.zipWithIndex.map { case (v, i) => ("k", i, v) }.toSeq
+            .toDF("key", "i", "y"), "y", p, Seq("key"), Seq("i"))
+        .orderBy("idx").select("trend", "seasonal", "resid").collect()
+      val arr = Decomposition.additive(y, p)
+      def bits(o: Any) = if (o == null) Double.NaN else o.asInstanceOf[Double]
+      rows.zipWithIndex.foreach { case (r, i) =>
+        for ((got, want) <- Seq(arr.trend(i), arr.seasonal(i), arr.resid(i))
+            .zip(Seq(bits(r.get(0)), bits(r.get(1)), bits(r.get(2)))))
+          assert(java.lang.Double.doubleToLongBits(got) ==
+            java.lang.Double.doubleToLongBits(want), s"p=$p i=$i: $got vs $want")
+      }
     }
   }
 }

@@ -114,6 +114,41 @@ class DriftSpec extends GraftSuite {
     assert(k.isNullAt(1))
   }
 
+  test("exactPercentile reproduces Spark's percentile bit for bit") {
+    val rng = new scala.util.Random(7)
+    val samples = Seq(
+      Array.fill(37)(rng.nextGaussian()),
+      Array.fill(50)(rng.nextInt(6).toDouble), // ties, integer counts
+      Array(3.0), Array(1.0, 2.0))
+    val ps = Seq(0.1, 0.25, 0.3, 0.5, 0.7, 0.75, 0.9)
+    for (xs <- samples) {
+      val want = xs.toSeq.toDF("x")
+        .agg(percentile(col("x"), array(ps.map(lit): _*)))
+        .as[Seq[Double]].head()
+      val got = ps.map(Drift.exactPercentile(xs.sorted, _))
+      assert(got.map(java.lang.Double.doubleToLongBits) ==
+        want.map(java.lang.Double.doubleToLongBits), s"$got vs $want")
+    }
+  }
+
+  test("psiOf/ksOf: the array twins of psi/ks") {
+    val rng = new scala.util.Random(11)
+    val cases = Seq(
+      (Array.fill(30)(rng.nextInt(8).toDouble), Array.fill(25)(rng.nextInt(12).toDouble)),
+      (Array.fill(20)(3.0), Array.fill(20)(3.0)), // all tied
+      (Array(1.0, 2.0, 3.0), Array(2.5, 3.5, 4.0)))
+    for ((b, c) <- cases) {
+      val df = (b.map(("k", "baseline", _)) ++ c.map(("k", "current", _))).toSeq
+        .toDF("key", "side", "x")
+      val psi = Drift.psi(df, "x", "side", Seq("key")).head().getAs[Double]("psi")
+      val ks = Drift.ks(df, "x", "side", Seq("key")).head().getAs[Double]("ks")
+      assert(math.abs(Drift.psiOf(b, c).get - psi) < 1e-12)
+      assert(Drift.ksOf(b, c).contains(ks))
+    }
+    assert(Drift.psiOf(Array(1.0), Array.empty).isEmpty)
+    assert(Drift.ksOf(Array(1.0), Array.empty).isEmpty)
+  }
+
   test("ensemble k-of-n vote (A12)") {
     val df = Seq((true, true, false), (true, false, false), (false, false, false))
       .toDF("a", "b", "c")
