@@ -153,12 +153,7 @@ class ResumableValidation(spark: SparkSession, checkpointDir: String,
     // the aggregate-level constraints are stripped from every slice and
     // re-evaluated from merged state at the end — running without state
     // would silently drop their verdicts (pass-by-omission)
-    require(withStatsState || !check.constraints.exists {
-        case _: graft.dsl.MinRows | _: graft.dsl.MeanBetween |
-             _: graft.dsl.StddevBetween | _: graft.dsl.QuantileBetween |
-             _: graft.dsl.DistinctCountBetween => true
-        case _ => false
-      },
+    require(withStatsState || !check.constraints.exists(aggregateLevel),
       "check has aggregate-level constraints: withStatsState=false would drop their verdicts")
     requireDistinctRateNames(check)
     // fires even when every slice under the NEW count looks done (a
@@ -216,23 +211,31 @@ class ResumableValidation(spark: SparkSession, checkpointDir: String,
     * collectResults calls); renaming is free.
     */
   private def requireDistinctRateNames(check: Check): Unit = {
-    val rateNames = check.constraints.collect {
-      case c @ (_: graft.dsl.NotNull | _: graft.dsl.Compliance |
-          _: graft.dsl.ParsableAs | _: graft.dsl.NoPii |
-          _: graft.dsl.MinTextQuality | _: graft.dsl.VectorShape |
-          _: graft.dsl.LengthBounds) => c.name
-      // graded classic row families join the guard (their [global] rows
-      // re-aggregate by name); rate-0 instances emit no [global] rows
-      // and keep their historical freedom to share a column
-      case c: graft.dsl.InSet if c.maxFailRate > 0 => c.name
-      case c: graft.dsl.MatchesRegex if c.maxFailRate > 0 => c.name
-      case c: graft.dsl.ValueBounds if c.maxFailRate > 0 => c.name
-    }
+    // rate-0 hard-fail instances emit no [global] rows and keep their
+    // historical freedom to share a column
+    val rateNames = rated(check).map(_.name)
     val dups = rateNames.groupBy(identity).collect {
       case (n, occ) if occ.size > 1 => n }
     require(dups.isEmpty,
       s"resumable runs need distinct names for rate-bound constraints; " +
         s"duplicates: ${dups.mkString(", ")} (rename the labels/columns)")
+  }
+
+  /** The row checks whose slices each emit a `name[global]` rate verdict
+    * — the validator's one definition ([[Validator.StatelessCheck]]).
+    */
+  private def rated(check: Check): Seq[Validator.StatelessCheck] =
+    Validator.compileStateless(check.constraints).filter(_.globalRate)
+
+  /** Aggregate-level constraints: stripped from every slice and evaluated
+    * from the merged [[StatsState]] at the end (their per-slice answers
+    * would be wrong).
+    */
+  private def aggregateLevel(c: graft.dsl.Constraint): Boolean = c match {
+    case _: graft.dsl.MinRows | _: graft.dsl.MeanBetween |
+         _: graft.dsl.StddevBetween | _: graft.dsl.QuantileBetween |
+         _: graft.dsl.DistinctCountBetween => true
+    case _ => false
   }
 
   /** Global-SCOPED statistical constraints: their verdict is a claim about
@@ -280,17 +283,12 @@ class ResumableValidation(spark: SparkSession, checkpointDir: String,
     }
 
   /** Per-slice check: aggregate-level constraints are evaluated from the
-    * merged state at the end, not per slice (their per-slice answers would
-    * be wrong); global-scoped statistical constraints run once at
-    * completion; everything conversation-scoped stays.
+    * merged state at the end; global-scoped statistical constraints run
+    * once at completion; everything conversation-scoped stays.
     */
   private def sliceCheck(check: Check): Check = check.copy(
     constraints = check.constraints.filterNot {
-      case _: graft.dsl.MinRows => true
-      case _: graft.dsl.MeanBetween => true
-      case _: graft.dsl.StddevBetween => true
-      case _: graft.dsl.QuantileBetween => true
-      case _: graft.dsl.DistinctCountBetween => true
+      case c if aggregateLevel(c) => true
       // table-global schema conformance: evaluated ONCE in run() against
       // the full input — per-slice evaluation would union P duplicate
       // "(global)" verdicts and P copies of every schema violation row
@@ -327,30 +325,13 @@ class ResumableValidation(spark: SparkSession, checkpointDir: String,
     val violations = spark.read.parquet(done.map(p => s"${pDir(p)}/violations"): _*)
     val sliceVerdicts =
       spark.read.parquet(done.map(p => s"${pDir(p)}/verdicts"): _*)
-    // the rate-bound row checks (NotNull/Compliance/ParsableAs) stay in
-    // the slices for their row-level work, but each slice also emits a
-    // "name[global]" rate verdict over ITS rows — P slice-local rows are
-    // not a global claim. Their counts are exactly mergeable: re-aggregate
-    // sum(violations)/sum(rows) against the declared bound and replace.
-    // NotNull's global rate is ALSO re-derivable from merged StatsState
-    // (aggVerdicts) — the exact slice-count re-aggregation wins (it
-    // carries the true violation COUNT, not a 0/1 flag) and the redundant
-    // state row is filtered from the aggV union below.
-    val rateBounds: Map[String, Double] = check.constraints.collect {
-      case c @ graft.dsl.NotNull(_, r) => s"${c.name}[global]" -> r
-      case c @ graft.dsl.Compliance(_, _, r) => s"${c.name}[global]" -> r
-      case c @ graft.dsl.ParsableAs(_, _, r) => s"${c.name}[global]" -> r
-      case c @ graft.dsl.NoPii(_, _, r) => s"${c.name}[global]" -> r
-      case c @ graft.dsl.MinTextQuality(_, _, r) => s"${c.name}[global]" -> r
-      case c @ graft.dsl.VectorShape(_, _, _, _, r) => s"${c.name}[global]" -> r
-      case c @ graft.dsl.LengthBounds(_, _, _, r) => s"${c.name}[global]" -> r
-      // the classic row families only emit [global] rows when GRADED
-      case c @ graft.dsl.InSet(_, _, r) if r > 0 => s"${c.name}[global]" -> r
-      case c @ graft.dsl.MatchesRegex(_, _, r) if r > 0 =>
-        s"${c.name}[global]" -> r
-      case c @ graft.dsl.ValueBounds(_, _, _, r) if r > 0 =>
-        s"${c.name}[global]" -> r
-    }.toMap
+    // the rate-bound row checks stay in the slices for their row-level
+    // work, but each slice also emits a "name[global]" rate verdict over
+    // ITS rows — P slice-local rows are not a global claim. Their counts
+    // are exactly mergeable: re-aggregate sum(violations)/sum(rows)
+    // against the declared bound and replace.
+    val rateBounds: Map[String, Double] = rated(check)
+      .map(sc => s"${sc.name}[global]" -> sc.maxFailRate).toMap
     val rateKeys = rateBounds.keys.toSeq
     val verdicts = if (rateKeys.isEmpty) sliceVerdicts else {
       val boundsDf = rateBounds.toSeq.toDF("constraint", "__max_rate")
@@ -384,10 +365,6 @@ class ResumableValidation(spark: SparkSession, checkpointDir: String,
         .withColumn("violation_rate", lit(0.0))
         .select("partition_key", "constraint", "pass", "rows", "violations",
           "violation_rate")
-        // NotNull[global] is already re-aggregated EXACTLY from the slice
-        // counts above — drop the redundant state-derived copy
-        .where(if (rateKeys.isEmpty) lit(true)
-          else !col("constraint").isin(rateKeys: _*))
       verdicts.unionByName(aggV)
     } else verdicts
     // schema conformance (pure plan metadata) and the global-scoped

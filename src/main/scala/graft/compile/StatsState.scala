@@ -26,6 +26,8 @@ object StatsState {
     }.distinct.map(_ -> true)
     val categorical = (check.constraints.collect {
       case c: DistinctCountBetween => c.column
+      // null counters for callers that report them (q45); NotNull's
+      // [global] verdict itself re-aggregates from the slice counts
       case c: NotNull => c.column
       // MinRows has no column of its own but still needs the row counter:
       // state the key column so a MinRows-only check writes state and its
@@ -120,10 +122,6 @@ object StatsState {
       case c @ DistinctCountBetween(columnName, lo, hi) =>
         val v = rows(columnName).getAs[Long]("distinct")
         (c.name, v >= lo && v <= hi, rows(columnName).getAs[Long]("n"), v.toDouble)
-      case c @ NotNull(columnName, maxRate) =>
-        val r = rows(columnName)
-        val rate = r.getAs[Long]("nulls").toDouble / math.max(1L, r.getAs[Long]("n"))
-        (s"${c.name}[global]", rate <= maxRate, r.getAs[Long]("n"), rate)
     }
     verdicts.toDF("constraint", "pass", "rows", "observed")
       .withColumn("partition_key", lit("(global)"))

@@ -31,6 +31,16 @@ import graft.series.SeriesKernels
   *
   * Verdicts are per conversation for row/series constraints (the north
   * rule's per-partition pass/fail) and global for aggregate constraints.
+  * Every global result computed on the driver takes ONE path: schema
+  * conformance, the stats-row verdicts (MinRows, moments, quantiles,
+  * distinct counts), the `name[global]` rate verdicts of the rate-bound
+  * row checks (which ones is [[StatelessCheck.globalRate]]'s single
+  * definition; each reads one fused fail count), key share, and the
+  * one-row statistics of passes 10-16 (drift, duplicate and near-duplicate
+  * rates, coverage, correlation, freshness, language and value share,
+  * entropy, uniqueness/distinctness, mutual information) append driver
+  * rows to two buffers, and ONE LocalRelation of global violations (when
+  * any breached) and ONE of global verdicts join the result's unions.
   */
 object Validator {
 
@@ -67,16 +77,39 @@ object Validator {
     StructField("bound", StringType),
     StructField("severity", StringType)))
 
-  /** A compiled row-level check over the CURRENT row only. */
+  // nullable only where some verdict frame can hold a null (the
+  // constraint name of the per-conversation verdicts): a needless
+  // nullable flag changes the schema the verdict union writes
+  private val verdictSchema = StructType(Seq(
+    StructField("partition_key", StringType, nullable = false),
+    StructField("constraint", StringType),
+    StructField("pass", BooleanType, nullable = false),
+    StructField("rows", LongType, nullable = false),
+    StructField("violations", LongType, nullable = false),
+    StructField("violation_rate", DoubleType, nullable = false)))
+
+  /** A compiled row-level check over the CURRENT row only.
+    *
+    * `globalRate` is the ONE definition of which checks also carry a
+    * `name[global]` verdict bounding their violation rate over the whole
+    * table by `maxFailRate`: every family except the classic hard-fail
+    * ones (`hardFail`: InSet / MatchesRegex / ValueBounds / TextEquals),
+    * which join only when graded — a rate-0 hard-fail instance keeps its
+    * per-conversation verdict surface alone. The fused fail counts, the
+    * `[global]` verdicts and Checkpoint's re-aggregation all read it.
+    */
   private[graft] final case class StatelessCheck(name: String,
-      maxRate: Double, severity: String, column: String, violated: Column,
-      observed: Column, bound: String)
+      maxFailRate: Double, severity: String, column: String,
+      violated: Column, observed: Column, bound: String, hardFail: Boolean) {
+    def globalRate: Boolean = !hardFail || maxFailRate > 0
+  }
 
   /** The stateless row-level constraint subset, compiled to Columns —
     * shared VERBATIM by the batch row-flags pass and the streaming face
     * ([[graft.streaming.StreamingRowChecks]]): these families (NotNull /
     * InSet / MatchesRegex / ValueBounds / TextEquals / Compliance /
-    * ParsableAs / NoPii / MinTextQuality) read only the current row, so
+    * ParsableAs / NoPii / MinTextQuality / LengthBounds / VectorShape)
+    * read only the current row, so
     * one compile site keeps batch and stream semantics identical by
     * construction.
     * Constraints outside the subset are simply not returned (callers that
@@ -86,38 +119,40 @@ object Validator {
       : Seq[StatelessCheck] = cs.collect {
     case c @ NotNull(columnName, maxRate) =>
       StatelessCheck(c.name, maxRate, c.severity, columnName,
-        col(columnName).isNull, lit(null).cast("string"), "not null")
+        col(columnName).isNull, lit(null).cast("string"), "not null",
+        hardFail = false)
     case c @ InSet(columnName, allowed, maxRate) =>
       StatelessCheck(c.name, maxRate, c.severity, columnName,
         col(columnName).isNotNull && !col(columnName).isin(allowed: _*),
-        col(columnName), s"in {${allowed.mkString(",")}}")
+        col(columnName), s"in {${allowed.mkString(",")}}", hardFail = true)
     case c @ MatchesRegex(columnName, re, maxRate) =>
       StatelessCheck(c.name, maxRate, c.severity, columnName,
         col(columnName).isNotNull && !col(columnName).rlike(re),
-        col(columnName), s"matches $re")
+        col(columnName), s"matches $re", hardFail = true)
     case c @ ValueBounds(columnName, lo, hi, maxRate) =>
       val v = col(columnName)
       val f = (lo.map(v < _) ++ hi.map(v > _)).reduceOption(_ || _)
         .getOrElse(lit(false))
       StatelessCheck(c.name, maxRate, c.severity, columnName,
         v.isNotNull && f, v.cast("string"),
-        s"[${lo.getOrElse(Double.NegativeInfinity)},${hi.getOrElse(Double.PositiveInfinity)}]")
+        s"[${lo.getOrElse(Double.NegativeInfinity)},${hi.getOrElse(Double.PositiveInfinity)}]",
+        hardFail = true)
     case c @ TextEquals(columnName, expected) =>
       StatelessCheck(c.name, 0.0, c.severity, columnName,
         !(col(columnName) <=> expected), col(columnName),
-        "closed-form text")
+        "closed-form text", hardFail = true)
     case c @ Compliance(label, pred, maxRate) =>
       // fails CLOSED: false or null predicate both violate; the observed
       // column carries the predicate's raw truth value
       StatelessCheck(c.name, maxRate, c.severity, label,
         !coalesce(expr(pred), lit(false)), expr(pred).cast("string"),
-        s"satisfies $pred")
+        s"satisfies $pred", hardFail = false)
     case c @ ParsableAs(columnName, castTo, maxRate) =>
       // nulls are NotNull's finding; only unconvertible VALUES violate
       StatelessCheck(c.name, maxRate, c.severity, columnName,
         col(columnName).isNotNull &&
           expr(s"try_cast(`$columnName` AS $castTo)").isNull,
-        col(columnName), s"castable to $castTo")
+        col(columnName), s"castable to $castTo", hardFail = false)
     case c @ NoPii(columnName, kinds, maxRate) =>
       // observed = the matched KIND NAMES, never the matched text (a
       // violation sink must not replicate the PII it flags); nulls are
@@ -125,7 +160,8 @@ object Validator {
       val matched = graft.text.Pii.matchedKinds(col(columnName), kinds)
       StatelessCheck(c.name, maxRate, c.severity, columnName,
         col(columnName).isNotNull && size(matched) > 0,
-        concat_ws(",", matched), s"no pii (${kinds.mkString(",")})")
+        concat_ws(",", matched), s"no pii (${kinds.mkString(",")})",
+        hardFail = false)
     case c @ MinTextQuality(columnName, minScore, maxRate) =>
       // observed = the SCORE, not the text (low-quality text is exactly
       // what a violation sink shouldn't accumulate); nulls are NotNull's
@@ -133,7 +169,7 @@ object Validator {
       val score = graft.text.TextAnalysis.qualityScoreCol(col(columnName))
       StatelessCheck(c.name, maxRate, c.severity, columnName,
         col(columnName).isNotNull && score < minScore,
-        score.cast("string"), s"quality >= $minScore")
+        score.cast("string"), s"quality >= $minScore", hardFail = false)
     case c @ LengthBounds(columnName, lo, hi, maxRate) =>
       // observed = the LENGTH, never the text (an over-long value is
       // exactly what a violation sink shouldn't accumulate); nulls are
@@ -144,7 +180,7 @@ object Validator {
       StatelessCheck(c.name, maxRate, c.severity, columnName,
         col(columnName).isNotNull && f, len.cast("string"),
         s"length in [${lo.getOrElse(0L)}," +
-          s"${hi.map(_.toString).getOrElse("inf")}]")
+          s"${hi.map(_.toString).getOrElse("inf")}]", hardFail = false)
     case c @ VectorShape(columnName, dim, normLo, normHi, maxRate) =>
       // observed = WHICH legs fired (dim=…/element/norm=…), never the
       // vector itself (a float array does not belong in a violation
@@ -167,7 +203,7 @@ object Validator {
           when(badNorm, concat(lit("norm="), round(norm, 6).cast("string")))),
         s"vector(dim=${dim.getOrElse("*")}, " +
           s"norm in [${normLo.getOrElse(0.0)}," +
-          s"${normHi.getOrElse(Double.PositiveInfinity)}])")
+          s"${normHi.getOrElse(Double.PositiveInfinity)}])", hardFail = false)
   }
 
   /** One projection emitting every configured check's violation rows:
@@ -249,6 +285,28 @@ object Validator {
     val key = col(check.keyCol)
     val ord = col(check.orderCol)
 
+    // every result computed on the driver — schema conformance, the
+    // stats-row verdicts, key share and the one-row global statistics of
+    // passes 10-16 — lands in these two buffers, which become at most ONE
+    // LocalRelation of violations and ONE of verdicts at the end
+    val globalViolationRows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val globalVerdictRows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    def localRelation(rows: Seq[Row], schema: StructType): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, schema)
+    }
+    /** A driver-computed global result: one "(global)" verdict that passes
+      * iff nothing breached, plus one violation row per (observed, bound)
+      * breach.
+      */
+    def global(c: Constraint, column: String, rows: Long, rate: Double,
+        breaches: Seq[(String, String)]): Unit = {
+      globalViolationRows ++= breaches.map { case (observed, bound) =>
+        Row(c.name, "(global)", -1, column, observed, bound, c.severity) }
+      globalVerdictRows += Row("(global)", c.name, breaches.isEmpty, rows,
+        breaches.size.toLong, rate)
+    }
+
     // ---- pass 0: schema conformance (pure plan metadata, zero scans) -------
     // evaluated FIRST: when a declared column is MISSING, any later pass
     // that references it would die in analysis with a raw
@@ -261,20 +319,16 @@ object Validator {
       check.constraints.collect { case c: ExpectedSchema =>
         c -> schemaMismatches(df, c)
       }
-    val schemaViolationDfs: Seq[DataFrame] = schemaResults.map { case (c, ms) =>
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        ms.map { case (n, obs, bnd) =>
-          Row(c.name, null, null, n, obs, bnd, c.severity) }.asJava,
-        violationSchema)
+    schemaResults.foreach { case (c, ms) =>
+      globalViolationRows ++= ms.map { case (n, obs, bnd) =>
+        Row(c.name, null, null, n, obs, bnd, c.severity) }
     }
     if (schemaResults.exists(_._2.exists(_._2 == "(missing)"))) {
-      import spark.implicits._
-      val verdicts = schemaResults.map { case (c, ms) =>
-        ("(global)", c.name, ms.isEmpty, 0L, ms.size.toLong, 0.0)
-      }.toDF("partition_key", "constraint", "pass", "rows", "violations",
-        "violation_rate")
-      return Result(schemaViolationDfs.reduce(_ unionByName _), verdicts)
+      globalVerdictRows ++= schemaResults.map { case (c, ms) =>
+        Row("(global)", c.name, ms.isEmpty, 0L, ms.size.toLong, 0.0)
+      }
+      return Result(localRelation(globalViolationRows.toSeq, violationSchema),
+        localRelation(globalVerdictRows.toSeq, verdictSchema))
     }
 
     // ---- pass 1: fused global aggregation --------------------------------
@@ -286,7 +340,6 @@ object Validator {
       case c: IqrOutliers => c.column
       case c: GlobalZ => c.column
     }).distinct
-    val nullCols = check.constraints.collect { case c: NotNull => c.column }.distinct
     val distinctCols = check.constraints.collect {
       case c: DistinctCountBetween => c.column }.distinct
     // (column, q, approx): approx rides percentile_approx (one-pass QTree
@@ -304,31 +357,12 @@ object Validator {
       .map { case ((c, q), needs) => (c, q, needs.forall(_._3)) }
       .toSeq.sortBy(t => (t._1, t._2))
 
-    // compliance fail counts and correlations fuse into the SAME one-pass
-    // aggregation: compliance is keyed by constraint position (two rules
-    // may share a label), correlation by the (x, y) column pair
-    val compCs: Seq[(Compliance, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: Compliance, i) => (c, i) }
-    val parsCs: Seq[(ParsableAs, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: ParsableAs, i) => (c, i) }
-    val piiCs: Seq[(NoPii, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: NoPii, i) => (c, i) }
-    val qualCs: Seq[(MinTextQuality, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: MinTextQuality, i) => (c, i) }
-    val vecCs: Seq[(VectorShape, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: VectorShape, i) => (c, i) }
-    val lenCs: Seq[(LengthBounds, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: LengthBounds, i) => (c, i) }
-    // the graded (maxFailRate > 0) instances of the classic hard-fail row
-    // families get a [global] rate verdict like Compliance's; rate-0
-    // instances keep their original verdict surface untouched (per-conv
-    // hard fail — and the flagship twins/goldens stay byte-identical)
-    val insetCs: Seq[(InSet, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: InSet, i) if c.maxFailRate > 0 => (c, i) }
-    val regexCs: Seq[(MatchesRegex, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: MatchesRegex, i) if c.maxFailRate > 0 => (c, i) }
-    val vbCs: Seq[(ValueBounds, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: ValueBounds, i) if c.maxFailRate > 0 => (c, i) }
+    // the rate-bound row checks ([[StatelessCheck.globalRate]]) fuse one
+    // fail count each into the SAME one-pass aggregation, keyed by
+    // constraint position (two rules may share a name)
+    val rated: Seq[(StatelessCheck, Int)] = check.constraints.zipWithIndex
+      .flatMap { case (c, i) =>
+        compileStateless(Seq(c)).filter(_.globalRate).map(_ -> i) }
     // value share: one matched count per constraint position (two bounds
     // may target the same (column, value)) + a shared non-null census
     // per distinct column
@@ -352,38 +386,10 @@ object Validator {
 
     val aggExprs: Seq[Column] =
       Seq(count(lit(1)).as("__rows")) ++
-      compCs.map { case (c, i) =>
-        // fails closed; the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__comp__$i") } ++
-      parsCs.map { case (c, i) =>
-        // the ONE compile site's predicate, so the global count can never
-        // drift from the per-row violations it summarizes
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__pars__$i") } ++
-      piiCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__pii__$i") } ++
-      qualCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__qual__$i") } ++
-      vecCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__vec__$i") } ++
-      lenCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__len__$i") } ++
-      (insetCs.map { case (c, i) => (c: Constraint, i, "__inset__") } ++
-        regexCs.map { case (c, i) => (c: Constraint, i, "__regex__") } ++
-        vbCs.map { case (c, i) => (c: Constraint, i, "__vb__") })
-        .map { case (c, i, prefix) =>
-          // the ONE compile site's predicate, like ParsableAs
-          count(when(compileStateless(Seq(c)).head.violated, 1))
-            .as(s"$prefix$i") } ++
+      // the ONE compile site's predicate, so a global count can never
+      // drift from the per-row violations it summarizes
+      rated.map { case (sc, i) =>
+        count(when(sc.violated, 1)).as(s"__rate__$i") } ++
       // value share: matched count per constraint + shared non-null
       // census per column (LanguageShare's shape, string-form equality)
       shareCs.map { case (c, i) =>
@@ -417,13 +423,12 @@ object Validator {
           stddev_samp(wx).as(s"__corrsx__${x}__${y}"),
           stddev_samp(wy).as(s"__corrsy__${x}__${y}")) } ++
       // cast("timestamp") first: unix_micros rejects TIMESTAMP_NTZ; the
-      // NTZ→TS cast applies the SESSION tz, and pass 14b interprets asOf
+      // NTZ→TS cast applies the SESSION tz, and pass 14 interprets asOf
       // in that same zone, so the offset cancels and lag is the plain
       // wall-clock difference in any session zone — the Sessions.withGap
       // idiom
       staleCols.map(c =>
         max(unix_micros(col(c).cast("timestamp"))).as(s"__maxts__$c")) ++
-      nullCols.map(c => count(when(col(c).isNull, 1)).as(s"__nulls__$c")) ++
       numericCols.flatMap { c => Seq(
         avg(col(c)).as(s"__mean__$c"),
         stddev_samp(col(c)).as(s"__stds__$c"),
@@ -466,8 +471,12 @@ object Validator {
       if (needsStats) statsRow.getAs[Long]("__rows") else 0L
 
     // ---- pass 1b: MAD for RobustZ ----------------------------------------
-    val madCols = check.constraints.collect { case c: RobustZ => (c.column, c.approx) }
-      .distinct
+    // keyed by column ONLY, like quantileNeeds: two RobustZ on one column
+    // at different approx settings share the one `__mad__` alias, and
+    // exact wins for both
+    val robustCs = check.constraints.collect { case c: RobustZ => c }
+    val madCols: Seq[(String, Boolean)] = robustCs.map(_.column).distinct
+      .map(c => c -> robustCs.filter(_.column == c).forall(_.approx))
     val mads: Map[String, Double] = if (madCols.nonEmpty) {
       // Column composition, NOT string interpolation: an all-null column
       // yields med = NaN, and "abs(c - NaN)" as SQL text parses `NaN` as a
@@ -490,8 +499,9 @@ object Validator {
     } else Map.empty
 
     // ---- pass 2: row-level flags → violation rows -------------------------
+    // maxRate: the per-conversation verdict's rate bound (0 = hard fail)
     case class RowCheck(c: Constraint, column: String, violated: Column,
-        observed: Column, bound: String)
+        observed: Column, bound: String, maxRate: Double)
 
     // small dimensions compile REFERENTIAL INTEGRITY to an inline isin row
     // check fused into the single row-flags projection — no anti-join
@@ -551,7 +561,7 @@ object Validator {
         val violated = if (nullOk) col(columnName).isNotNull && !coalesce(in, lit(false))
           else col(columnName).isNull || !coalesce(in, lit(false))
         Some(RowCheck(c, columnName, violated, col(columnName),
-          s"in dim $dimName.$dimCol"))
+          s"in dim $dimName.$dimCol", 0.0))
       // the stateless families compile through the ONE shared site
       // the streaming face also uses (batch/stream semantic parity by
       // construction — see compileStateless)
@@ -559,19 +569,20 @@ object Validator {
           _: TextEquals | _: Compliance | _: ParsableAs | _: NoPii |
           _: MinTextQuality | _: VectorShape | _: LengthBounds) =>
         val sc = compileStateless(Seq(c)).head
-        Some(RowCheck(c, sc.column, sc.violated, sc.observed, sc.bound))
+        Some(RowCheck(c, sc.column, sc.violated, sc.observed, sc.bound,
+          sc.maxFailRate))
       case c @ GlobalZ(columnName, t) =>
         val mu = stat(s"__mean__$columnName"); val sd = stat(s"__stdp__$columnName")
         val z = (col(columnName) - mu) / sd
         Some(RowCheck(c, columnName,
           if (sd > 0) abs(z) > t else lit(false),
-          col(columnName).cast("string"), s"|z|<=$t"))
+          col(columnName).cast("string"), s"|z|<=$t", 0.0))
       case c @ RobustZ(columnName, t, _) =>
         val med = stat(s"__q0.5__$columnName"); val mad = mads(columnName)
         val rz = lit(0.6745) * (col(columnName) - med) / mad
         Some(RowCheck(c, columnName,
           if (mad > 0) abs(rz) > t else lit(false),
-          col(columnName).cast("string"), s"|rz|<=$t"))
+          col(columnName).cast("string"), s"|rz|<=$t", 0.0))
       case c @ IqrOutliers(columnName, k, _) =>
         val q1 = stat(s"__q0.25__$columnName"); val q3 = stat(s"__q0.75__$columnName")
         val lo = q1 - k * (q3 - q1); val hi = q3 + k * (q3 - q1)
@@ -582,7 +593,7 @@ object Validator {
         Some(RowCheck(c, columnName,
           if (lo.isNaN || hi.isNaN) lit(false)
           else col(columnName) < lo || col(columnName) > hi,
-          col(columnName).cast("string"), s"[$lo,$hi]"))
+          col(columnName).cast("string"), s"[$lo,$hi]", 0.0))
       case _ => None
     }
 
@@ -655,11 +666,11 @@ object Validator {
         // of pure waste per suite pass
         val checks = Seq(RowCheck(c, columnName,
           coalesce(n >= window && !isnan(z) && abs(z) > t, lit(false)),
-          v.cast("string"), s"rolling|z|<=$t@$window")) ++
+          v.cast("string"), s"rolling|z|<=$t@$window", 0.0)) ++
           fuseHere.map { u =>
             RowCheck(u, u.columns.mkString(","),
               col("__ord_peers") > 1 && col("__ord_first"),
-              col("__ord_peers"), "1 copy")
+              col("__ord_peers"), "1 copy", 0.0)
           }
         explodeViolations(stats, checks)
     }
@@ -780,11 +791,10 @@ object Validator {
     // graft.agg.FreqItems): two extra scans per constraint, O(k) state, no
     // full-table groupBy. Offenders are ≤ 1/maxFrac keys by pigeonhole, so
     // collecting them to build verdict rows is bounded by construction.
-    val keyShareVerdicts: Seq[DataFrame] = check.constraints.collect {
+    check.constraints.foreach {
       case c: MaxKeyShare =>
         require(c.k >= 2.0 / c.maxFrac,
           s"${c.name}: k=${c.k} below the 2/maxFrac guarantee bound")
-        import spark.implicits._
         // the census shares, thresholds, and rates are all over the
         // NON-NULL key count (census.n) — one consistent denominator;
         // a null mega-key is NotNull's finding, not this constraint's
@@ -793,14 +803,12 @@ object Validator {
         val nKeys = math.max(1L, census.n)
         val hot = census.hot
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val perKey = hot.map { case (k0, cnt) =>
-          (k0, c.name, false, cnt, cnt, cnt.toDouble / nKeys.toDouble)
+        globalVerdictRows ++= hot.map { case (k0, cnt) =>
+          Row(k0, c.name, false, cnt, cnt, cnt.toDouble / nKeys.toDouble)
         }
-        val global = ("(global)", c.name, hot.isEmpty, census.n,
+        globalVerdictRows += Row("(global)", c.name, hot.isEmpty, census.n,
           hot.size.toLong, hot.size.toDouble / nKeys.toDouble)
-        (perKey :+ global)
-          .toDF("partition_key", "constraint", "pass", "rows", "violations",
-            "violation_rate")
+      case _ =>
     }
 
     // ---- pass 7: fused sequence pass (ONE shared exchange) ------------------
@@ -852,7 +860,7 @@ object Validator {
             RowCheck(c, check.tsCol,
               coalesce(col("__gap_us") > c.maxGapSeconds * 1000000L,
                 lit(false)),
-              col("__gap_us") / lit(1e6), s"gap<=${c.maxGapSeconds}s")
+              col("__gap_us") / lit(1e6), s"gap<=${c.maxGapSeconds}s", 0.0)
           } ++
           transCs.map { c =>
             val curr = col(c.column)
@@ -873,7 +881,7 @@ object Validator {
                 .otherwise(concat_ws("->", prev, curr)),
               s"in {${c.allowed.map { case (a, b) => s"$a->$b" }.mkString(",")}}" +
                 c.firstIn.map(o => s" first in {${o.mkString(",")}}")
-                  .getOrElse(""))
+                  .getOrElse(""), 0.0)
           } ++
           monoCs.map { c =>
             val curr = col(c.column)
@@ -881,14 +889,14 @@ object Validator {
             val broke = if (c.strict) curr <= prev else curr < prev
             RowCheck(c, c.column,
               coalesce(prev.isNotNull && curr.isNotNull && broke, lit(false)),
-              curr, if (c.strict) "increasing" else "non-decreasing")
+              curr, if (c.strict) "increasing" else "non-decreasing", 0.0)
           } ++
           repCs.map { c =>
             val h = col(digestAlias(c.column))
             val ph = col(lagAlias(digestAlias(c.column)))
             RowCheck(c, c.column,
               coalesce(ph.isNotNull && h.isNotNull && h === ph, lit(false)),
-              h, "differs from previous")
+              h, "differs from previous", 0.0)
           }
         Seq(explodeViolations(aug, checks))
       }
@@ -952,85 +960,64 @@ object Validator {
     // a broadcast of its bins−1 edges, a codegen'd bin lambda over the
     // current side; the single PSI row collects on the driver like the
     // fused global stats (a 1-row aggregate, sanctioned).
-    val distDriftResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ DistributionDrift(columnName, dimName, dimCol, maxPsi, bins,
-            maxKs) =>
-          val dim = ctx.dims.getOrElse(dimName,
-            throw new IllegalArgumentException(
-              s"dimension '$dimName' not registered"))
-          val sided = dim
-            .select(col(dimCol).cast("double").as("__v"))
+    check.constraints.foreach {
+      case c @ DistributionDrift(columnName, dimName, dimCol, maxPsi, bins,
+          maxKs) =>
+        val dim = ctx.dims.getOrElse(dimName,
+          throw new IllegalArgumentException(
+            s"dimension '$dimName' not registered"))
+        val sided = dim
+          .select(col(dimCol).cast("double").as("__v"))
+          .where(col("__v").isNotNull && !isnan(col("__v")))
+          .withColumn("__side", lit("baseline"))
+          .unionByName(df
+            .select(col(columnName).cast("double").as("__v"))
             .where(col("__v").isNotNull && !isnan(col("__v")))
-            .withColumn("__side", lit("baseline"))
-            .unionByName(df
-              .select(col(columnName).cast("double").as("__v"))
-              .where(col("__v").isNotNull && !isnan(col("__v")))
-              .withColumn("__side", lit("current")))
-            .withColumn("__k", lit(1))
-          // ONE distinct-value side census feeds both the PSI and the KS
-          // collect; persisted across the two actions when KS is on, so
-          // the raw sides are scanned once per suite instead of once per
-          // statistic. The census is bounded by the DISTINCT value count
-          // (not rows) — far smaller than the r5-rejected idea of caching
-          // the raw `sided` union; at the 10^12-row continuous-value
-          // extreme (census ~ rows) the documented scale path remains
-          // Drift.ksSketch, as before.
-          val census = graft.series.Drift
-            .sideCensus(sided, "__v", "__side", Seq("__k"))
-          if (maxKs.isDefined)
-            census.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val psiRows = graft.series.Drift
-            .psiFromCensus(census, Seq("__k"), bins)
-            .select(col("psi"), col("n_cur")).collect()
-          // null / absent PSI = one side empty after null-scrub: "no
-          // signal", passes — emptiness is MinRows' finding
-          val psiVal: Option[Double] =
-            if (psiRows.isEmpty || psiRows(0).isNullAt(0)) None
-            else Some(psiRows(0).getDouble(0))
-          // KS half (opt-in): exact tie-correct two-sample D over the
-          // same persisted census
-          val ksVal: Option[Double] = maxKs.flatMap { _ =>
-            val rows = graft.series.Drift
-              .ksFromCensus(census, Seq("__k"))
-              .select(col("ks")).collect()
-            if (rows.isEmpty || rows(0).isNullAt(0)) None
-            else Some(rows(0).getDouble(0))
-          }
-          if (maxKs.isDefined) census.unpersist()
-          val psiFailed = psiVal.exists(_ > maxPsi)
-          val ksFailed = (maxKs, ksVal) match {
-            case (Some(mk), Some(k)) => k > mk
-            case _ => false
-          }
-          val breaches: Seq[(String, String)] =
-            (if (psiFailed) Seq(psiVal.get.toString ->
-              s"psi<=$maxPsi vs $dimName.$dimCol") else Nil) ++
-            (if (ksFailed) Seq(ksVal.get.toString ->
-              s"ks<=${maxKs.get} vs $dimName.$dimCol") else Nil)
-          val violationDf: Option[DataFrame] =
-            if (breaches.isEmpty) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                breaches.map { case (obs, bound) =>
-                  Row(c.name, "(global)", -1, columnName, obs, bound,
-                    c.severity) }.asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          // rows = the current side's census, not the fused-stats
-          // totalRows: a drift-only suite never runs the stats pass and a
-          // hardcoded 0 would read as "nothing scanned" (entropy precedent)
-          val curN =
-            if (psiRows.isEmpty || psiRows(0).isNullAt(1)) 0L
-            else psiRows(0).getLong(1)
-          val verdictDf = Seq(("(global)", c.name, breaches.isEmpty, curN,
-              breaches.size.toLong, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+            .withColumn("__side", lit("current")))
+          .withColumn("__k", lit(1))
+        // ONE distinct-value side census feeds both the PSI and the KS
+        // collect; persisted across the two actions when KS is on, so
+        // the raw sides are scanned once per suite instead of once per
+        // statistic. The census is bounded by the DISTINCT value count
+        // (not rows) — far smaller than the r5-rejected idea of caching
+        // the raw `sided` union; at the 10^12-row continuous-value
+        // extreme (census ~ rows) the documented scale path remains
+        // Drift.ksSketch, as before.
+        val census = graft.series.Drift
+          .sideCensus(sided, "__v", "__side", Seq("__k"))
+        if (maxKs.isDefined)
+          census.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val psiRows = graft.series.Drift
+          .psiFromCensus(census, Seq("__k"), bins)
+          .select(col("psi"), col("n_cur")).collect()
+        // null / absent PSI = one side empty after null-scrub: "no
+        // signal", passes — emptiness is MinRows' finding
+        val psiVal: Option[Double] =
+          if (psiRows.isEmpty || psiRows(0).isNullAt(0)) None
+          else Some(psiRows(0).getDouble(0))
+        // KS half (opt-in): exact tie-correct two-sample D over the
+        // same persisted census
+        val ksVal: Option[Double] = maxKs.flatMap { _ =>
+          val rows = graft.series.Drift
+            .ksFromCensus(census, Seq("__k"))
+            .select(col("ks")).collect()
+          if (rows.isEmpty || rows(0).isNullAt(0)) None
+          else Some(rows(0).getDouble(0))
+        }
+        if (maxKs.isDefined) census.unpersist()
+        // rows = the current side's census, not the fused-stats
+        // totalRows: a drift-only suite never runs the stats pass and a
+        // hardcoded 0 would read as "nothing scanned" (entropy precedent)
+        val curN =
+          if (psiRows.isEmpty || psiRows(0).isNullAt(1)) 0L
+          else psiRows(0).getLong(1)
+        global(c, columnName, curN, 0.0,
+          psiVal.filter(_ > maxPsi)
+            .map(_.toString -> s"psi<=$maxPsi vs $dimName.$dimCol").toSeq ++
+          maxKs.zip(ksVal).collect { case (mk, k) if k > mk =>
+            k.toString -> s"ks<=$mk vs $dimName.$dimCol" })
+      case _ =>
+    }
 
     // ---- pass 11: duplicate-rate bound ---------------------------------------
     // (n − distinct)/n over non-null values of the column, the declarative
@@ -1038,44 +1025,30 @@ object Validator {
     // digest (the value itself never rides the shuffle); the exact tier is
     // a two-stage hash aggregation over digests, the approx tier a single
     // HLL aggregate with O(1) state. One-row collect, like the fused stats.
-    val dupRateResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MaxDuplicateRate(columnName, maxRate, normalized, approx) =>
-          val digest =
-            if (normalized)
-              graft.text.TextAnalysis.fingerprint(col(columnName).cast("string"))
-            else md5(col(columnName).cast("string"))
-          val base = df.where(col(columnName).isNotNull)
-            .select(digest.as("__digest"))
-          val distinctAgg =
-            if (approx) approx_count_distinct(col("__digest")).as("d")
-            else countDistinct(col("__digest")).as("d")
-          val row = base.agg(count(lit(1)).as("n"), distinctAgg).collect()(0)
-          val n = row.getLong(0)
-          val d = row.getLong(1)
-          // HLL can overshoot n on small inputs — a negative "rate" is noise
-          val rate = if (n == 0L) 0.0
-            else math.max(0.0, (n - d).toDouble / n.toDouble)
-          val failed = n > 0L && rate > maxRate
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  rate.toString, s"dup_rate<=$maxRate", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          // rows = the dup census (non-null values examined), not the
-          // fused-stats totalRows — a dup-rate-only suite never runs the
-          // stats pass and a hardcoded 0 would read as "nothing scanned"
-          val verdictDf = Seq(("(global)", c.name, !failed, n,
-              if (failed) 1L else 0L, rate))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    check.constraints.foreach {
+      case c @ MaxDuplicateRate(columnName, maxRate, normalized, approx) =>
+        val digest =
+          if (normalized)
+            graft.text.TextAnalysis.fingerprint(col(columnName).cast("string"))
+          else md5(col(columnName).cast("string"))
+        val base = df.where(col(columnName).isNotNull)
+          .select(digest.as("__digest"))
+        val distinctAgg =
+          if (approx) approx_count_distinct(col("__digest")).as("d")
+          else countDistinct(col("__digest")).as("d")
+        val row = base.agg(count(lit(1)).as("n"), distinctAgg).collect()(0)
+        val n = row.getLong(0)
+        val d = row.getLong(1)
+        // HLL can overshoot n on small inputs — a negative "rate" is noise
+        val rate = if (n == 0L) 0.0
+          else math.max(0.0, (n - d).toDouble / n.toDouble)
+        // rows = the dup census (non-null values examined), not the
+        // fused-stats totalRows — a dup-rate-only suite never runs the
+        // stats pass and a hardcoded 0 would read as "nothing scanned"
+        global(c, columnName, n, rate, Option.when(n > 0L && rate > maxRate)(
+          rate.toString -> s"dup_rate<=$maxRate").toSeq)
+      case _ =>
+    }
 
     // ---- pass 12: time-bucket coverage ---------------------------------------
     // one hash aggregation on the truncated bucket (only the bucket
@@ -1083,336 +1056,213 @@ object Validator {
     // collected driver-side — bounded by span/bucket, the constraint's
     // documented contract — and the span-complete bucket axis is walked
     // in fixed UTC steps so a silent mid-range hole (count 0) surfaces
-    val coverageResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ TimeBucketCoverage(columnName, bucket, minRowsBound) =>
-          val stepSec = bucket match {
-            case "minute" => 60L
-            case "hour" => 3600L
-            case "day" => 86400L
-            case "week" => 604800L
-          }
-          // DST guard (r5 ADVICE): date_trunc uses the SESSION zone while
-          // the axis below steps fixed epoch seconds — under a
-          // DST-observing zone, day/week truncation shifts by an hour
-          // twice a year and healthy buckets would report starved. Refuse
-          // loudly at bucket >= day unless the session zone is
-          // fixed-offset (mains pin UTC; this makes the library enforce
-          // what the mains assumed).
-          if (stepSec >= 86400L) {
-            val zone = spark.conf.get("spark.sql.session.timeZone")
-            val rules = java.time.ZoneId.of(zone).getRules
-            require(rules.isFixedOffset,
-              s"time_bucket_coverage($bucket) needs a fixed-offset session " +
-                s"timeZone (got '$zone'): DST shifts would misalign the " +
-                "fixed-step bucket axis and report false starvation")
-          }
-          // cast("timestamp") first: date_trunc/unix_timestamp on an NTZ
-          // column (the MaxStaleness discipline; identity under the UTC
-          // session zone)
-          val censusRows = df.where(col(columnName).isNotNull)
-            .groupBy(date_trunc(bucket,
-              col(columnName).cast("timestamp")).as("__b"))
-            .agg(count(lit(1)).as("__n"))
-            .select(unix_timestamp(col("__b")).as("__e"), col("__n"))
-            .collect()
-          val census = censusRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-          // span cap (r5 ADVICE/VERDICT item 5): ONE corrupt timestamp
-          // (epoch 0) makes span/bucket enormous — a minute census over
-          // decades would materialize tens of millions of driver tuples
-          // and a comparably huge violation frame. Refuse loudly past the
-          // cap instead of silently thrashing the driver; the bound is
-          // config-tunable for genuinely long healthy spans.
-          val maxSpanBuckets = spark.conf
-            .getOption("spark.graft.coverage.maxSpanBuckets")
-            .map(_.toLong).getOrElse(1000000L)
-          if (census.nonEmpty) {
-            val span = (census.keys.max - census.keys.min) / stepSec + 1L
-            require(span <= maxSpanBuckets,
-              s"time_bucket_coverage($bucket) span is $span buckets > cap " +
-                s"$maxSpanBuckets (spark.graft.coverage.maxSpanBuckets) — " +
-                "likely a corrupt timestamp; bound the column's range " +
-                "(value_bounds / freshness) or coarsen the bucket first")
-          }
-          val starved: Seq[(Long, Long)] =
-            if (census.isEmpty) Nil
-            else {
-              val lo = census.keys.min
-              val hi = census.keys.max
-              (lo to hi by stepSec).iterator
-                .map(e => e -> census.getOrElse(e, 0L))
-                .filter(_._2 < minRowsBound).toSeq
-            }
-          val fmt = java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd HH:mm:ss")
-            .withZone(java.time.ZoneOffset.UTC)
-          val violationDf: Option[DataFrame] =
-            if (starved.isEmpty) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                starved.map { case (e, n) =>
-                  Row(c.name, "(global)", -1, columnName,
-                    s"${fmt.format(java.time.Instant.ofEpochSecond(e))} n=$n",
-                    s"every $bucket >= $minRowsBound rows", c.severity)
-                }.asJava, violationSchema))
-            }
-          import spark.implicits._
-          // rows = the coverage census (non-null timestamps examined);
-          // violation_rate = starved share of the span's buckets
-          val spanBuckets: Long =
-            if (census.isEmpty) 0L
-            else (census.keys.max - census.keys.min) / stepSec + 1L
-          val verdictDf = Seq(("(global)", c.name, starved.isEmpty,
-              census.values.sum, starved.size.toLong,
-              if (spanBuckets == 0L) 0.0
-              else starved.size.toDouble / spanBuckets))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    check.constraints.foreach {
+      case c @ TimeBucketCoverage(columnName, bucket, minRowsBound) =>
+        val stepSec = bucket match {
+          case "minute" => 60L
+          case "hour" => 3600L
+          case "day" => 86400L
+          case "week" => 604800L
+        }
+        // DST guard (r5 ADVICE): date_trunc uses the SESSION zone while
+        // the axis below steps fixed epoch seconds — under a
+        // DST-observing zone, day/week truncation shifts by an hour
+        // twice a year and healthy buckets would report starved. Refuse
+        // loudly at bucket >= day unless the session zone is
+        // fixed-offset (mains pin UTC; this makes the library enforce
+        // what the mains assumed).
+        if (stepSec >= 86400L) {
+          val zone = spark.conf.get("spark.sql.session.timeZone")
+          val rules = java.time.ZoneId.of(zone).getRules
+          require(rules.isFixedOffset,
+            s"time_bucket_coverage($bucket) needs a fixed-offset session " +
+              s"timeZone (got '$zone'): DST shifts would misalign the " +
+              "fixed-step bucket axis and report false starvation")
+        }
+        // cast("timestamp") first: date_trunc/unix_timestamp on an NTZ
+        // column (the MaxStaleness discipline; identity under the UTC
+        // session zone)
+        val censusRows = df.where(col(columnName).isNotNull)
+          .groupBy(date_trunc(bucket,
+            col(columnName).cast("timestamp")).as("__b"))
+          .agg(count(lit(1)).as("__n"))
+          .select(unix_timestamp(col("__b")).as("__e"), col("__n"))
+          .collect()
+        val census = censusRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val spanBuckets: Long =
+          if (census.isEmpty) 0L
+          else (census.keys.max - census.keys.min) / stepSec + 1L
+        // span cap (r5 ADVICE/VERDICT item 5): ONE corrupt timestamp
+        // (epoch 0) makes span/bucket enormous — a minute census over
+        // decades would materialize tens of millions of driver tuples
+        // and a comparably huge violation frame. Refuse loudly past the
+        // cap instead of silently thrashing the driver; the bound is
+        // config-tunable for genuinely long healthy spans.
+        val maxSpanBuckets = spark.conf
+          .getOption("spark.graft.coverage.maxSpanBuckets")
+          .map(_.toLong).getOrElse(1000000L)
+        require(spanBuckets <= maxSpanBuckets,
+          s"time_bucket_coverage($bucket) span is $spanBuckets buckets > " +
+            s"cap $maxSpanBuckets (spark.graft.coverage.maxSpanBuckets) — " +
+            "likely a corrupt timestamp; bound the column's range " +
+            "(value_bounds / freshness) or coarsen the bucket first")
+        val starved: Seq[(Long, Long)] =
+          if (census.isEmpty) Nil
+          else (census.keys.min to census.keys.max by stepSec).iterator
+            .map(e => e -> census.getOrElse(e, 0L))
+            .filter(_._2 < minRowsBound).toSeq
+        val fmt = java.time.format.DateTimeFormatter
+          .ofPattern("yyyy-MM-dd HH:mm:ss")
+          .withZone(java.time.ZoneOffset.UTC)
+        // rows = the coverage census (non-null timestamps examined);
+        // violation_rate = starved share of the span's buckets
+        global(c, columnName, census.values.sum,
+          if (spanBuckets == 0L) 0.0
+          else starved.size.toDouble / spanBuckets,
+          starved.map { case (e, n) =>
+            s"${fmt.format(java.time.Instant.ofEpochSecond(e))} n=$n" ->
+              s"every $bucket >= $minRowsBound rows"
+          })
+      case _ =>
+    }
 
     // ---- pass 13: near-duplicate rate bound ----------------------------------
     // the full minhash → LSH banding → exact-Jaccard-verify chain (the
     // audited q64 shape) with the suite's (key, ord) composite as the doc
     // id, digest-reduced map-side so the key text never rides the dedup
     // shuffles. Rate = docs with ≥1 verified near-dup / non-null docs.
-    val nearDupResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MaxNearDuplicateRate(columnName, maxRate, threshold,
-            shingleK, numHashes, bands, estJaccardMin) =>
-          // fixed-width md5 per component (no separator ambiguity), outer
-          // md5 for a compact 32-char id — the ratioCensusFrame discipline
-          val base = df.where(col(columnName).isNotNull)
-            .select(md5(concat(
-                md5(key.cast("string").cast("binary")),
-                md5(ord.cast("string").cast("binary"))).cast("binary"))
-                .as("__nd_id"),
-              col(columnName))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // census = distinct doc NODES: duplicate (key, ord) rows collapse
-          // into one node everywhere in the chain (signatures AND the
-          // exact verifier both take the shingle-set UNION over a node's
-          // rows), so the denominator must collapse them too or the
-          // rate deflates under exact-dup keys
-          // the node census and the dedup chain are independent jobs over
-          // the persisted base — run the census from a driver thread so
-          // the two overlap (guide §2.6) instead of serializing
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val nFuture = Future(base.select("__nd_id").distinct().count())(
-            ExecutionContext.global)
-          // the dedup helpers persist their internal frames (signatures,
-          // banded pairs, candidate shingles) for the chain's duration;
-          // collect them so THIS pass can honor the Result.cached
-          // contract — every count below is materialized eagerly, so all
-          // of them release right here rather than riding Result.cached
-          val chainCached = scala.collection.mutable.Buffer.empty[DataFrame]
-          val flagged: Long = {
-            val sigs = graft.dedup.Dedup.minhashSignatures(base, "__nd_id",
-              columnName, shingleK, numHashes)
-            // est prefilter dominated by exact verification when its
-            // bound sits at or below the verify threshold (the dupGroups
-            // tiering rule) — banding-only candidates, two fewer joins
-            val cands =
-              if (estJaccardMin <= threshold)
-                graft.dedup.Dedup.minhashBandPairs(sigs, "__nd_id", bands,
-                  sigLen = numHashes)
-              else graft.dedup.Dedup.minhashLshCandidates(sigs,
-                "__nd_id", bands, estJaccardMin, chainCached += _,
-                sigLen = numHashes).select("a_id", "b_id")
-            val verified = graft.dedup.Dedup.verifyJaccard(base,
-              cands, "__nd_id", columnName, shingleK,
-              threshold, chainCached += _)
-            // endpoints of verified pairs = docs with >=1 near-duplicate
-            verified.select(col("a_id").as("__vid"))
-              .union(verified.select(col("b_id"))).distinct().count()
-          }
-          val n = Await.result(nFuture, Duration.Inf)
-          chainCached.foreach(_.unpersist())
-          base.unpersist()
-          val rate = if (n == 0L) 0.0 else flagged.toDouble / n.toDouble
-          val failed = n > 0L && rate > maxRate
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  rate.toString, s"near_dup_rate<=$maxRate@j>=$threshold",
-                  c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          // rows = the dedup census (non-null docs), the dup-rate precedent
-          val verdictDf = Seq(("(global)", c.name, !failed, n,
-              if (failed) 1L else 0L, rate))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    check.constraints.foreach {
+      case c @ MaxNearDuplicateRate(columnName, maxRate, threshold,
+          shingleK, numHashes, bands, estJaccardMin) =>
+        // fixed-width md5 per component (no separator ambiguity), outer
+        // md5 for a compact 32-char id — the ratioCensusFrame discipline
+        val base = df.where(col(columnName).isNotNull)
+          .select(md5(concat(
+              md5(key.cast("string").cast("binary")),
+              md5(ord.cast("string").cast("binary"))).cast("binary"))
+              .as("__nd_id"),
+            col(columnName))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // census = distinct doc NODES: duplicate (key, ord) rows collapse
+        // into one node everywhere in the chain (signatures AND the
+        // exact verifier both take the shingle-set UNION over a node's
+        // rows), so the denominator must collapse them too or the
+        // rate deflates under exact-dup keys
+        // the node census and the dedup chain are independent jobs over
+        // the persisted base — run the census from a driver thread so
+        // the two overlap (guide §2.6) instead of serializing
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        val nFuture = Future(base.select("__nd_id").distinct().count())(
+          ExecutionContext.global)
+        // the dedup helpers persist their internal frames (signatures,
+        // banded pairs, candidate shingles) for the chain's duration;
+        // collect them so THIS pass can honor the Result.cached
+        // contract — every count below is materialized eagerly, so all
+        // of them release right here rather than riding Result.cached
+        val chainCached = scala.collection.mutable.Buffer.empty[DataFrame]
+        val flagged: Long = {
+          val sigs = graft.dedup.Dedup.minhashSignatures(base, "__nd_id",
+            columnName, shingleK, numHashes)
+          // est prefilter dominated by exact verification when its
+          // bound sits at or below the verify threshold (the dupGroups
+          // tiering rule) — banding-only candidates, two fewer joins
+          val cands =
+            if (estJaccardMin <= threshold)
+              graft.dedup.Dedup.minhashBandPairs(sigs, "__nd_id", bands,
+                sigLen = numHashes)
+            else graft.dedup.Dedup.minhashLshCandidates(sigs,
+              "__nd_id", bands, estJaccardMin, chainCached += _,
+              sigLen = numHashes).select("a_id", "b_id")
+          val verified = graft.dedup.Dedup.verifyJaccard(base,
+            cands, "__nd_id", columnName, shingleK,
+            threshold, chainCached += _)
+          // endpoints of verified pairs = docs with >=1 near-duplicate
+          verified.select(col("a_id").as("__vid"))
+            .union(verified.select(col("b_id"))).distinct().count()
+        }
+        val n = Await.result(nFuture, Duration.Inf)
+        chainCached.foreach(_.unpersist())
+        base.unpersist()
+        val rate = if (n == 0L) 0.0 else flagged.toDouble / n.toDouble
+        // rows = the dedup census (non-null docs), the dup-rate precedent
+        global(c, columnName, n, rate, Option.when(n > 0L && rate > maxRate)(
+          rate.toString -> s"near_dup_rate<=$maxRate@j>=$threshold").toSeq)
+      case _ =>
+    }
 
-    // ---- pass 14: correlation bound (reads the fused stats row — no job) ----
-    val corrResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ CorrelationBetween(x, y, lo, hi) =>
-          val cv = stat(s"__corrcv__${x}__${y}")
-          val sx = stat(s"__corrsx__${x}__${y}")
-          val sy = stat(s"__corrsy__${x}__${y}")
-          val v = if (!cv.isNaN && sx > 0 && sy > 0) cv / (sx * sy)
-            else Double.NaN
-          // undefined r (constant column / <2 usable rows) is "no signal"
-          // and passes — constancy is StddevBetween's finding
-          val failed = !v.isNaN && (v < lo || v > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, s"$x,$y", v.toString,
-                  s"corr in [$lo,$hi]", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
-
-    // ---- pass 14b: freshness bound (reads the fused stats row — no job) -----
-    val staleResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MaxStaleness(columnName, _, maxLag) =>
-          val maxTs = stat(s"__maxts__$columnName")
-          // NaN max = empty table (or all-null column): no newest row, "no
-          // signal", passes — emptiness is MinRows' finding. Data newer
-          // than asOf gives a NEGATIVE lag and passes (future skew is
-          // Monotonic/Compliance's finding). asOf is read in the SESSION
-          // zone — the zone the NTZ→TS cast in the fused agg applied — so
-          // the offset cancels and lag is wall-clock-true in any zone.
-          val zone = java.time.ZoneId.of(
-            spark.sessionState.conf.sessionLocalTimeZone)
-          val lagSec: Option[Double] =
-            if (maxTs.isNaN) None
-            else Some((c.asOfMicrosIn(zone) - maxTs) / 1e6)
-          val failed = lagSec.exists(_ > maxLag)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  lagSec.get.toString,
-                  s"lag<=${maxLag}s as of ${c.asOf}", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
-
-    // ---- pass 14c: language-mix bound (reads the fused stats row — no job) --
-    val langResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ LanguageShare(columnName, lang, lo, hi) =>
-          val n = stat(s"__langn__$columnName")
-          // empty census (no non-null rows): no mix to bound, "no
-          // signal", passes — emptiness is MinRows'/NotNull's finding
-          val share: Option[Double] =
-            if (n.isNaN || n == 0.0) None
-            else Some(stat(s"__lang__${columnName}__$lang") / n)
-          val failed = share.exists(s => s < lo || s > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  share.get.toString,
-                  s"share($lang) in [$lo,$hi]", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-              if (failed) 1L else 0L, share.getOrElse(0.0)))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
-
+    // ---- pass 14: correlation, freshness, language and value share ---------
+    // all four read the fused stats row — no job.
+    // A share is a matched count over its non-null census; an empty census
+    // has no mix to bound — "no signal", passes (emptiness is
+    // MinRows'/NotNull's finding)
+    def shareOf(matched: String, census: String): Option[Double] = {
+      val n = stat(census)
+      Option.when(!n.isNaN && n != 0.0)(stat(matched) / n)
+    }
+    check.constraints.foreach {
+      case c @ CorrelationBetween(x, y, lo, hi) =>
+        val cv = stat(s"__corrcv__${x}__${y}")
+        val sx = stat(s"__corrsx__${x}__${y}")
+        val sy = stat(s"__corrsy__${x}__${y}")
+        // undefined r (constant column / <2 usable rows) is "no signal"
+        // and passes — constancy is StddevBetween's finding
+        val r = Option.when(!cv.isNaN && sx > 0 && sy > 0)(cv / (sx * sy))
+        global(c, s"$x,$y", totalRows, 0.0, r.filter(v => v < lo || v > hi)
+          .map(_.toString -> s"corr in [$lo,$hi]").toSeq)
+      case c @ MaxStaleness(columnName, _, maxLag) =>
+        val maxTs = stat(s"__maxts__$columnName")
+        // NaN max = empty table (or all-null column): no newest row, "no
+        // signal", passes — emptiness is MinRows' finding. Data newer
+        // than asOf gives a NEGATIVE lag and passes (future skew is
+        // Monotonic/Compliance's finding). asOf is read in the SESSION
+        // zone — the zone the NTZ→TS cast in the fused agg applied — so
+        // the offset cancels and lag is wall-clock-true in any zone.
+        val zone = java.time.ZoneId.of(
+          spark.sessionState.conf.sessionLocalTimeZone)
+        val lagSec = Option.when(!maxTs.isNaN)(
+          (c.asOfMicrosIn(zone) - maxTs) / 1e6)
+        global(c, columnName, totalRows, 0.0, lagSec.filter(_ > maxLag)
+          .map(_.toString -> s"lag<=${maxLag}s as of ${c.asOf}").toSeq)
+      case c @ LanguageShare(columnName, lang, lo, hi) =>
+        val share = shareOf(s"__lang__${columnName}__$lang",
+          s"__langn__$columnName")
+        global(c, columnName, totalRows, share.getOrElse(0.0),
+          share.filter(s => s < lo || s > hi)
+            .map(_.toString -> s"share($lang) in [$lo,$hi]").toSeq)
+      case _ =>
+    }
     // value share: the categorical-mix bound, straight from the fused
     // counts (LanguageShare's verdict shape)
-    val shareResults: Seq[(Option[DataFrame], DataFrame)] =
-      shareCs.map { case (c, i) =>
-        val n = stat(s"__sharen__${c.column}")
-        // empty census (no non-null rows): no mix to bound — "no signal"
-        val share: Option[Double] =
-          if (n.isNaN || n == 0.0) None
-          else Some(stat(s"__share__$i") / n)
-        val failed = share.exists(s => s < c.lo || s > c.hi)
-        val violationDf: Option[DataFrame] =
-          if (!failed) None
-          else {
-            import scala.jdk.CollectionConverters._
-            Some(spark.createDataFrame(
-              Seq(Row(c.name, "(global)", -1, c.column,
-                share.get.toString,
-                s"share(${c.value}) in [${c.lo},${c.hi}]",
-                c.severity)).asJava,
-              violationSchema))
-          }
-        import spark.implicits._
-        val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-            if (failed) 1L else 0L, share.getOrElse(0.0)))
-          .toDF("partition_key", "constraint", "pass", "rows",
-            "violations", "violation_rate")
-        (violationDf, verdictDf)
-      }
+    shareCs.foreach { case (c, i) =>
+      val share = shareOf(s"__share__$i", s"__sharen__${c.column}")
+      global(c, c.column, totalRows, share.getOrElse(0.0),
+        share.filter(s => s < c.lo || s > c.hi)
+          .map(_.toString -> s"share(${c.value}) in [${c.lo},${c.hi}]").toSeq)
+    }
 
     // ---- pass 15: entropy bound ---------------------------------------------
     // one hash aggregation per constraint (groupBy value → count, map-side
     // combined — only distinct values ride the exchange), then H = ln N −
     // Σ n·ln n / N as a one-row reduction. Meant for category columns.
-    val entropyResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ EntropyBetween(columnName, lo, hi) =>
-          val row = df.where(col(columnName).isNotNull)
-            .groupBy(col(columnName)).agg(count(lit(1)).as("__n"))
-            .agg(sum(col("__n")).as("N"),
-              sum(col("__n").cast("double") * log(col("__n").cast("double")))
-                .as("S"))
-            .collect()(0)
-          val hOpt: Option[Double] =
-            if (row.isNullAt(0) || row.getLong(0) == 0L) None
-            else Some(math.log(row.getLong(0).toDouble) -
-              row.getDouble(1) / row.getLong(0).toDouble)
-          // verdict `rows` = the census size (non-null values), not
-          // totalRows: an entropy-only suite never runs the fused stats
-          // pass, and a hardcoded 0 would read as "nothing scanned"
-          val censusN = if (row.isNullAt(0)) 0L else row.getLong(0)
-          val failed = hOpt.exists(h => h < lo || h > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  hOpt.get.toString, s"entropy in [$lo,$hi]", c.severity))
-                  .asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, censusN,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    check.constraints.foreach {
+      case c @ EntropyBetween(columnName, lo, hi) =>
+        val row = df.where(col(columnName).isNotNull)
+          .groupBy(col(columnName)).agg(count(lit(1)).as("__n"))
+          .agg(sum(col("__n")).as("N"),
+            sum(col("__n").cast("double") * log(col("__n").cast("double")))
+              .as("S"))
+          .collect()(0)
+        // verdict `rows` = the census size (non-null values), not
+        // totalRows: an entropy-only suite never runs the fused stats
+        // pass, and a hardcoded 0 would read as "nothing scanned"
+        val censusN = if (row.isNullAt(0)) 0L else row.getLong(0)
+        val h = Option.when(censusN > 0L)(
+          math.log(censusN.toDouble) - row.getDouble(1) / censusN.toDouble)
+        global(c, columnName, censusN, 0.0, h.filter(v => v < lo || v > hi)
+          .map(_.toString -> s"entropy in [$lo,$hi]").toSeq)
+      case _ =>
+    }
 
     // ---- pass 15b: uniqueness / distinctness ratio bounds ----------------------
     def keyCensusRatio(columns: Seq[String]): (Long, Long, Long) = {
@@ -1420,90 +1270,57 @@ object Validator {
       if (row.isNullAt(0)) (0L, 0L, 0L)
       else (row.getLong(0), row.getLong(1), row.getLong(2))
     }
-    def ratioResult(c: Constraint, columns: Seq[String], lo: Double,
-        hi: Double, what: String, tot: Long, num: Long)
-        : (Option[DataFrame], DataFrame) = {
-      val ratioOpt = if (tot == 0L) None else Some(num.toDouble / tot)
-      val failed = ratioOpt.exists(r => r < lo || r > hi)
-      val violationDf: Option[DataFrame] =
-        if (!failed) None
-        else {
-          import scala.jdk.CollectionConverters._
-          Some(spark.createDataFrame(
-            Seq(Row(c.name, "(global)", -1, columns.mkString(","),
-              ratioOpt.get.toString, s"$what in [$lo,$hi]", c.severity))
-              .asJava,
-            violationSchema))
-        }
-      import spark.implicits._
-      val verdictDf = Seq(("(global)", c.name, !failed, tot,
-          if (failed) 1L else 0L, 0.0))
-        .toDF("partition_key", "constraint", "pass", "rows",
-          "violations", "violation_rate")
-      (violationDf, verdictDf)
+    def ratioVerdict(c: Constraint, columns: Seq[String], lo: Double,
+        hi: Double, what: String, tot: Long, num: Long): Unit =
+      global(c, columns.mkString(","), tot, 0.0,
+        Option.when(tot > 0L)(num.toDouble / tot)
+          .filter(r => r < lo || r > hi)
+          .map(_.toString -> s"$what in [$lo,$hi]").toSeq)
+    check.constraints.foreach {
+      case c @ UniquenessBetween(columns, lo, hi) =>
+        val (tot, _, uniq) = keyCensusRatio(columns)
+        ratioVerdict(c, columns, lo, hi, "uniqueness", tot, uniq)
+      case c @ DistinctnessBetween(columns, lo, hi) =>
+        val (tot, groups, _) = keyCensusRatio(columns)
+        ratioVerdict(c, columns, lo, hi, "distinctness", tot, groups)
+      case _ =>
     }
-    val ratioResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ UniquenessBetween(columns, lo, hi) =>
-          val (tot, _, uniq) = keyCensusRatio(columns)
-          ratioResult(c, columns, lo, hi, "uniqueness", tot, uniq)
-        case c @ DistinctnessBetween(columns, lo, hi) =>
-          val (tot, groups, _) = keyCensusRatio(columns)
-          ratioResult(c, columns, lo, hi, "distinctness", tot, groups)
-      }
 
     // ---- pass 16: mutual-information bound ------------------------------------
     // one hash aggregation per constraint (groupBy (x,y) → count, map-side
     // combined); marginals and the MI sum are window/aggregate passes over
     // the O(distinct pairs) census, never the fact table. ANSI-safe: every
     // divisor is a positive count by construction.
-    val miResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MutualInformationBetween(x, y, lo, hi) =>
-          // "__pn"/"__tot", NOT "__n"/"__N": column resolution is
-          // case-INSENSITIVE by default, so a name differing only in case
-          // silently REPLACES the existing column in withColumn
-          val pairs = df
-            .where(col(x).isNotNull && col(y).isNotNull)
-            .groupBy(col(x).as("__x"), col(y).as("__y"))
-            .agg(count(lit(1)).cast("double").as("__pn"))
-          val row = pairs
-            .withColumn("__nx", sum(col("__pn"))
-              .over(Window.partitionBy(col("__x"))))
-            .withColumn("__ny", sum(col("__pn"))
-              .over(Window.partitionBy(col("__y"))))
-            .withColumn("__tot", sum(col("__pn")).over(Window.partitionBy()))
-            .agg(sum(col("__pn") / col("__tot") *
-              log(col("__pn") * col("__tot") / (col("__nx") * col("__ny"))))
-              .as("mi"),
-              sum(col("__pn")).cast("long").as("__pairs"))
-            .collect()(0)
-          // clamped at 0: MI ≥ 0 by theorem; fp summation noise on an
-          // independent pair can land at −1e−16 and a lo = 0 bound must
-          // not flag it
-          val miOpt: Option[Double] =
-            if (row.isNullAt(0)) None
-            else Some(math.max(0.0, row.getDouble(0)))
-          // verdict `rows` = complete pairs in the census (see entropy)
-          val censusN = if (row.isNullAt(1)) 0L else row.getLong(1)
-          val failed = miOpt.exists(v => v < lo || v > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, s"$x,$y",
-                  miOpt.get.toString, s"mi in [$lo,$hi]", c.severity))
-                  .asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, censusN,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    check.constraints.foreach {
+      case c @ MutualInformationBetween(x, y, lo, hi) =>
+        // "__pn"/"__tot", NOT "__n"/"__N": column resolution is
+        // case-INSENSITIVE by default, so a name differing only in case
+        // silently REPLACES the existing column in withColumn
+        val pairs = df
+          .where(col(x).isNotNull && col(y).isNotNull)
+          .groupBy(col(x).as("__x"), col(y).as("__y"))
+          .agg(count(lit(1)).cast("double").as("__pn"))
+        val row = pairs
+          .withColumn("__nx", sum(col("__pn"))
+            .over(Window.partitionBy(col("__x"))))
+          .withColumn("__ny", sum(col("__pn"))
+            .over(Window.partitionBy(col("__y"))))
+          .withColumn("__tot", sum(col("__pn")).over(Window.partitionBy()))
+          .agg(sum(col("__pn") / col("__tot") *
+            log(col("__pn") * col("__tot") / (col("__nx") * col("__ny"))))
+            .as("mi"),
+            sum(col("__pn")).cast("long").as("__pairs"))
+          .collect()(0)
+        // clamped at 0: MI ≥ 0 by theorem; fp summation noise on an
+        // independent pair can land at −1e−16 and a lo = 0 bound must
+        // not flag it
+        val mi = Option.when(!row.isNullAt(0))(math.max(0.0, row.getDouble(0)))
+        // verdict `rows` = complete pairs in the census (see entropy)
+        global(c, s"$x,$y", if (row.isNullAt(1)) 0L else row.getLong(1), 0.0,
+          mi.filter(v => v < lo || v > hi)
+            .map(_.toString -> s"mi in [$lo,$hi]").toSeq)
+      case _ =>
+    }
 
     // Violations feed BOTH the violation sink and the per-conversation
     // verdict counts — persist so the (typically small) violation set is
@@ -1511,33 +1328,15 @@ object Validator {
     val allViolations = (Seq(rowViolations) ++ windowViolations ++
       uniqueViolations ++ contiguousViolations ++ refViolations ++
       sequenceViolations ++ fdViolations ++ asofViolations ++
-      schemaViolationDfs ++ distDriftResults.flatMap(_._1) ++
-      dupRateResults.flatMap(_._1) ++ nearDupResults.flatMap(_._1) ++
-      corrResults.flatMap(_._1) ++ staleResults.flatMap(_._1) ++
-      langResults.flatMap(_._1) ++
-      shareResults.flatMap(_._1) ++
-      coverageResults.flatMap(_._1) ++
-      entropyResults.flatMap(_._1) ++
-      ratioResults.flatMap(_._1) ++
-      miResults.flatMap(_._1) ++
-      driftResults.map(_._1)).reduce(_ unionByName _)
+      driftResults.map(_._1) ++
+      Option.when(globalViolationRows.nonEmpty)(
+        localRelation(globalViolationRows.toSeq, violationSchema)))
+      .reduce(_ unionByName _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- verdicts -----------------------------------------------------------
     import spark.implicits._
-    val perConvConstraints = rowChecks.map(rc => (rc.c.name, rc.c match {
-      case NotNull(_, maxRate) => maxRate
-      case Compliance(_, _, maxRate) => maxRate
-      case ParsableAs(_, _, maxRate) => maxRate
-      case NoPii(_, _, maxRate) => maxRate
-      case MinTextQuality(_, _, maxRate) => maxRate
-      case VectorShape(_, _, _, _, maxRate) => maxRate
-      case LengthBounds(_, _, _, maxRate) => maxRate
-      case InSet(_, _, maxRate) => maxRate
-      case MatchesRegex(_, _, maxRate) => maxRate
-      case ValueBounds(_, _, _, maxRate) => maxRate
-      case _ => 0.0
-    })) ++
+    val perConvConstraints = rowChecks.map(rc => (rc.c.name, rc.maxRate)) ++
       check.constraints.collect { case c: RollingZDrift => (c.name, 0.0) } ++
       // a UniqueKey whose tuple misses the conversation key verdicts
       // GLOBALLY (its violation rows carry conv_id "(global)") — a
@@ -1570,11 +1369,8 @@ object Validator {
     // guarded, not left to PropagateEmptyRelation: a suite with no
     // per-conversation constraints (e.g. schema-only) must not even PLAN a
     // groupBy over the data
-    val perConvVerdicts = if (perConvConstraints.isEmpty) {
-      Seq.empty[(String, String, Boolean, Long, Long, Double)]
-        .toDF("partition_key", "constraint", "pass", "rows", "violations",
-          "violation_rate")
-    } else {
+    val perConvVerdicts: Option[DataFrame] = Option.when(
+        perConvConstraints.nonEmpty) {
       // the null-key conversation group joins under a "(null)" sentinel:
       // a null conv_id can never EQUI-match between the row census and
       // the violation counts, so without it the null group's verdict
@@ -1598,92 +1394,36 @@ object Validator {
     }
 
     // global verdicts for aggregate constraints, straight from the stats row
-    val globalVerdicts: Seq[(String, Boolean, Long, Long, Double)] =
-      check.constraints.collect {
-        case c @ MinRows(n) =>
-          (c.name, totalRows >= n, totalRows, if (totalRows >= n) 0L else 1L, 0.0)
-        case c @ MeanBetween(columnName, lo, hi) =>
-          val m = stat(s"__mean__$columnName")
-          (c.name, m >= lo && m <= hi, totalRows, if (m >= lo && m <= hi) 0L else 1L, 0.0)
-        case c @ StddevBetween(columnName, lo, hi) =>
-          val s0 = stat(s"__stds__$columnName")
-          (c.name, s0 >= lo && s0 <= hi, totalRows, if (s0 >= lo && s0 <= hi) 0L else 1L, 0.0)
-        case c @ QuantileBetween(columnName, q, lo, hi, _) =>
-          val v = stat(s"__q${q}__$columnName")
-          (c.name, v >= lo && v <= hi, totalRows, if (v >= lo && v <= hi) 0L else 1L, 0.0)
-        case c @ DistinctCountBetween(columnName, lo, hi) =>
-          val v = stat(s"__hll__$columnName").toLong
-          (c.name, v >= lo && v <= hi, totalRows, if (v >= lo && v <= hi) 0L else 1L, 0.0)
-        case c @ NotNull(columnName, maxRate) =>
-          val rate = stat(s"__nulls__$columnName") / math.max(1.0, totalRows.toDouble)
-          (s"${c.name}[global]", rate <= maxRate, totalRows,
-            stat(s"__nulls__$columnName").toLong, rate)
-      } ++
-      // compliance global rate bound, straight from the fused fail count
-      // (the per-conversation verdicts ride rowChecks under c.name; the
-      // [global] suffix keeps the two verdict rows distinct, like NotNull)
-      compCs.map { case (c, i) =>
-        val fails = stat(s"__comp__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // parsable_as global rate bound, like compliance's
-      parsCs.map { case (c, i) =>
-        val fails = stat(s"__pars__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // no_pii global rate bound, like compliance's
-      piiCs.map { case (c, i) =>
-        val fails = stat(s"__pii__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // min_quality global rate bound, like compliance's
-      qualCs.map { case (c, i) =>
-        val fails = stat(s"__qual__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // vector_shape global rate bound, like compliance's
-      vecCs.map { case (c, i) =>
-        val fails = stat(s"__vec__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // length_bounds global rate bound, like compliance's
-      lenCs.map { case (c, i) =>
-        val fails = stat(s"__len__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // graded in_set / matches / bounds rate verdicts, like compliance's
-      (insetCs.map { case (c, i) =>
-          (c.name, c.maxFailRate, s"__inset__$i") } ++
-        regexCs.map { case (c, i) =>
-          (c.name, c.maxFailRate, s"__regex__$i") } ++
-        vbCs.map { case (c, i) => (c.name, c.maxFailRate, s"__vb__$i") })
-        .map { case (name, maxRate, alias) =>
-          val fails = stat(alias)
-          val rate = fails / math.max(1.0, totalRows.toDouble)
-          (s"$name[global]", rate <= maxRate, totalRows, fails.toLong, rate)
-        } ++
-      // schema conformance: pass iff zero mismatches (already computed,
-      // driver-side, in pass 0)
-      schemaResults.map { case (c, ms) =>
-        (c.name, ms.isEmpty, totalRows, ms.size.toLong, 0.0)
-      }
-    val globalVerdictDf = globalVerdicts
-      .toDF("constraint", "pass", "rows", "violations", "violation_rate")
-      .withColumn("partition_key", lit("(global)"))
-      .select("partition_key", "constraint", "pass", "rows", "violations",
-        "violation_rate")
+    def within(c: Constraint, v: Double, lo: Double, hi: Double): Row = {
+      val pass = v >= lo && v <= hi
+      Row("(global)", c.name, pass, totalRows, if (pass) 0L else 1L, 0.0)
+    }
+    globalVerdictRows ++= check.constraints.collect {
+      case c @ MinRows(n) =>
+        within(c, totalRows.toDouble, n.toDouble, Double.PositiveInfinity)
+      case c @ MeanBetween(columnName, lo, hi) =>
+        within(c, stat(s"__mean__$columnName"), lo, hi)
+      case c @ StddevBetween(columnName, lo, hi) =>
+        within(c, stat(s"__stds__$columnName"), lo, hi)
+      case c @ QuantileBetween(columnName, q, lo, hi, _) =>
+        within(c, stat(s"__q${q}__$columnName"), lo, hi)
+      case c @ DistinctCountBetween(columnName, lo, hi) =>
+        within(c, stat(s"__hll__$columnName").toLong.toDouble, lo, hi)
+    }
+    // the rate-bound row checks' global bound, straight from the fused fail
+    // counts (their per-conversation verdicts ride rowChecks under the
+    // plain name; the [global] suffix keeps the two verdict rows distinct)
+    globalVerdictRows ++= rated.map { case (sc, i) =>
+      val fails = stat(s"__rate__$i")
+      val rate = fails / math.max(1.0, totalRows.toDouble)
+      Row("(global)", s"${sc.name}[global]", rate <= sc.maxFailRate,
+        totalRows, fails.toLong, rate)
+    }
+    // schema conformance: pass iff zero mismatches (already computed,
+    // driver-side, in pass 0)
+    globalVerdictRows ++= schemaResults.map { case (c, ms) =>
+      Row("(global)", c.name, ms.isEmpty, totalRows, ms.size.toLong, 0.0)
+    }
 
     // FDs and UniqueKeys whose tuple does NOT carry the conversation key
     // verdict globally (their violation rows carry conv_id "(global)",
@@ -1707,17 +1447,9 @@ object Validator {
             .as("violation_rate"))
     }
 
-    val allVerdicts = (Seq(perConvVerdicts, globalVerdictDf) ++
-      keyShareVerdicts ++ fdGlobalVerdicts ++ distDriftResults.map(_._2) ++
-      dupRateResults.map(_._2) ++ nearDupResults.map(_._2) ++
-      corrResults.map(_._2) ++ staleResults.map(_._2) ++
-      langResults.map(_._2) ++
-      shareResults.map(_._2) ++
-      coverageResults.map(_._2) ++
-      entropyResults.map(_._2) ++
-      ratioResults.map(_._2) ++
-      miResults.map(_._2) ++
-      driftResults.map(_._2))
+    val allVerdicts = (perConvVerdicts.toSeq ++
+      Seq(localRelation(globalVerdictRows.toSeq, verdictSchema)) ++
+      fdGlobalVerdicts ++ driftResults.map(_._2))
       .reduce(_ unionByName _)
 
     Result(allViolations, allVerdicts,

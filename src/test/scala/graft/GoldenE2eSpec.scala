@@ -1,11 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.compile.Validator
 import graft.dsl._
@@ -21,8 +16,6 @@ import graft.sources.{Tables, TranscriptGen}
   * Regenerate with `GRAFT_REGEN_GOLDENS=1 sbt "testOnly graft.GoldenE2eSpec"`.
   */
 class GoldenE2eSpec extends GraftSuite {
-
-  private val goldenDir = "src/test/resources/goldens"
 
   private lazy val fixture =
     TranscriptGen.generate(spark, nConvs = 120, baseTurns = 48)
@@ -48,50 +41,21 @@ class GoldenE2eSpec extends GraftSuite {
     TurnRateDrift(bucket = "10 minutes", period = 6, method = "stl",
       seasonal = 7, residThreshold = 3.0)))
 
-  /** Sorted, stably-formatted lines: the byte content of a golden file. */
-  private def render(df: DataFrame): Seq[String] = {
-    val fields = df.schema.fields
-    df.collect().map { row =>
-      fields.zipWithIndex.map { case (f, i) =>
-        if (row.isNullAt(i)) "NULL"
-        else f.dataType match {
-          // Locale.ROOT: golden bytes must not depend on the host JVM's
-          // default locale (comma-decimal locales would corrupt them)
-          case DoubleType =>
-            "%.6f".formatLocal(java.util.Locale.ROOT, row.getDouble(i))
-          case _ => String.valueOf(row.get(i))
-        }
-      }.mkString(",")
-    }.toSeq.sorted
-  }
-
-  private def check(name: String, lines: Seq[String]): Unit = {
-    val path = Paths.get(s"$goldenDir/$name")
-    if (sys.env.get("GRAFT_REGEN_GOLDENS").contains("1")) {
-      Files.write(path,
-        (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-      info(s"regenerated $path (${lines.size} lines)")
-    } else {
-      assert(Files.exists(path), s"golden $path missing — regen with " +
-        "GRAFT_REGEN_GOLDENS=1")
-      val want = new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
-        .split("\n").filter(_.nonEmpty).toSeq
-      assert(lines == want, s"$name drifted from the committed golden " +
-        s"(${lines.size} vs ${want.size} lines)")
-    }
-  }
+  private def check(name: String, lines: Seq[String]): Unit =
+    assert(lines == Goldens.committed(name, lines), s"$name drifted from " +
+      s"the committed golden (${lines.size} lines)")
 
   test("flagship suite verdicts + violations match the committed goldens") {
     val r = Validator.validate(fixture, suite, dims)
-    check("e2e_violations.csv", render(r.violations))
-    check("e2e_verdicts.csv", render(r.verdicts))
+    check("e2e_violations.csv", Goldens.render(r.violations))
+    check("e2e_verdicts.csv", Goldens.render(r.verdicts))
     r.unpersistAll()
   }
 
   test("the artifact is byte-stable under an input repartition") {
     val r7 = Validator.validate(fixture.repartition(7), suite, dims)
-    check("e2e_violations.csv", render(r7.violations))
-    check("e2e_verdicts.csv", render(r7.verdicts))
+    check("e2e_violations.csv", Goldens.render(r7.violations))
+    check("e2e_verdicts.csv", Goldens.render(r7.verdicts))
     r7.unpersistAll()
   }
 }

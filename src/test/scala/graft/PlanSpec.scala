@@ -363,4 +363,35 @@ class PlanSpec extends GraftSuite {
       r.unpersistAll()
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+
+  test("validate: every driver-side global verdict rides ONE LocalRelation") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+      LogicalPlan, Union}
+    import org.apache.spark.sql.types._
+    val fx = graft.compile.GlobalFamiliesFixture
+    val r = graft.compile.Validator.validate(fx.table(spark), fx.suite,
+      fx.context(spark))
+    val plan = r.verdicts.queryExecution.analyzed
+    // verdict-shaped literal rows: (partition_key, constraint, pass, rows,
+    // violations, violation_rate)
+    val verdictTypes = Seq(StringType, StringType, BooleanType, LongType,
+      LongType, DoubleType)
+    val relations = plan.collect {
+      case l: LocalRelation if l.output.map(_.dataType) == verdictTypes => l
+    }
+    assert(relations.size == 1,
+      s"${relations.size} verdict LocalRelations:\n$plan")
+    // 23 "(global)" rows plus the three hot conv_id keys of MaxKeyShare
+    assert(relations.head.data.size == 26, relations.head.data.size)
+    def unionArity(p: LogicalPlan): Int = p match {
+      case u: Union => u.children.map(unionArity).sum
+      case _ => 1
+    }
+    val arity = plan.collectFirst { case u: Union => unionArity(u) }
+      .getOrElse(1)
+    info(s"verdict plan Union children: $arity")
+    // the per-conversation verdicts and the one global relation
+    assert(arity == 2, plan)
+    r.unpersistAll()
+  }
 }

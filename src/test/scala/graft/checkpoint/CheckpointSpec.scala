@@ -287,4 +287,45 @@ class CheckpointSpec extends GraftSuite {
     assert(verdicts.where(col("constraint") === "entropy(role)")
       .count() == 1)
   }
+
+  test("graded InSet/MatchesRegex/ValueBounds: resumable [global] verdicts equal the direct path") {
+    // ValidatorSpec's graded fixture, spread over four conversations so
+    // the three slices each emit their own [global] rows to re-aggregate
+    val df = (0 until 8).map(i => (s"c${i % 4}", i / 4,
+        if (i < 2) "bad" else "ok", i.toDouble))
+      .toDF("conv_id", "turn_idx", "s", "v")
+    val graded = Check("g", Seq(
+      InSet("s", Seq("ok"), maxFailRate = 0.5),      // 2/8 = 0.25 → pass
+      MatchesRegex("s", "^ok$", maxFailRate = 0.1),  // 2/8 = 0.25 → fail
+      ValueBounds("v", Some(3.0), None, maxFailRate = 0.9))) // 3/8 pass
+    val dir = Files.createTempDirectory("graft_cp_graded").toString
+    val r = new ResumableValidation(spark, dir, partitions = 3)
+    assert(r.run(df, graded, Validator.Context()).nonEmpty)
+    val (_, verdicts, _) = r.collectResults(graded)
+    val direct = Validator.validate(df, graded)
+    def global(v: org.apache.spark.sql.DataFrame) =
+      v.where(col("constraint").endsWith("[global]"))
+        .select("constraint", "pass", "rows", "violations")
+        .as[(String, Boolean, Long, Long)].collect().toSeq.sorted
+    assert(global(verdicts) == Seq(("bounds(v)[global]", true, 8L, 3L),
+      ("in_set(s)[global]", true, 8L, 2L),
+      ("matches(s)[global]", false, 8L, 2L)), global(verdicts))
+    assert(global(verdicts) == global(direct.verdicts))
+    direct.unpersistAll()
+    // rate-0 instances carry no [global] row, so two of them may share a
+    // name; graded ones may not
+    val rate0 = Check("g0", Seq(InSet("s", Seq("ok")),
+      InSet("s", Seq("ok", "bad"))))
+    val dir0 = Files.createTempDirectory("graft_cp_graded0").toString
+    assert(new ResumableValidation(spark, dir0, partitions = 2)
+      .run(df, rate0, Validator.Context()).nonEmpty)
+    val dup = Check("g1", Seq(InSet("s", Seq("ok"), maxFailRate = 0.5),
+      InSet("s", Seq("ok", "bad"), maxFailRate = 0.1)))
+    val dir1 = Files.createTempDirectory("graft_cp_graded1").toString
+    val ex = intercept[IllegalArgumentException] {
+      new ResumableValidation(spark, dir1, partitions = 2)
+        .run(df, dup, Validator.Context())
+    }
+    assert(ex.getMessage.contains("in_set(s)"), ex.getMessage)
+  }
 }

@@ -1595,4 +1595,47 @@ class ValidatorSpec extends GraftSuite {
     assert(intercept[IllegalArgumentException](TurnCountBetween(9L, 3L))
       .getMessage.contains("9"))
   }
+
+  test("every global family, graded rate family and MaxKeyShare: rows match the goldens") {
+    import graft.Goldens.{committed, render}
+    val globals = GlobalFamiliesFixture.suite
+    val rated = GlobalFamiliesFixture.rated.map(_.name).toSet
+    val r = Validator.validate(GlobalFamiliesFixture.table(spark), globals,
+      GlobalFamiliesFixture.context(spark))
+    // the fixture makes every constraint fail: the graded rate families
+    // on their [global] verdict, the rest on their own
+    val failed = r.verdicts.where(!col("pass")).select("constraint")
+      .as[String].collect().toSet
+    val passing = globals.constraints.map(_.name).filterNot(n =>
+      failed(if (rated(n)) s"$n[global]" else n))
+    assert(passing.isEmpty, s"fixture should fail: $passing")
+    val violations = render(r.violations)
+    val verdicts = render(r.verdicts)
+    assert(violations == committed("global_families_violations.csv",
+      violations))
+    assert(verdicts == committed("global_families_verdicts.csv", verdicts))
+    r.unpersistAll()
+  }
+
+  test("RobustZ: an exact and an approximate instance on one column both use the exact MAD") {
+    // with both constraints the shared median is the exact 5, so
+    // |v - 5| = 4,3,2,1,1,4,9,35: exact MAD 3.5, approximate 3.0. At
+    // threshold 2.0 turn 7 (rz = 0.6745·35/3.5 ≈ 6.7) clears the exact
+    // bound; turn 6 (0.6745·9/3.0 ≈ 2.02) would clear only the
+    // approximate one
+    val df = Seq(1, 2, 3, 4, 6, 9, 14, 40).zipWithIndex
+      .map { case (v, i) => ("a", i, v.toDouble) }
+      .toDF("conv_id", "turn_idx", "v")
+    def flagged(cs: Constraint*): Seq[Int] = {
+      val r = Validator.validate(df, Check("rz", cs))
+      val turns = r.violations.select("turn_idx").as[Int].collect().toSeq
+      r.unpersistAll()
+      turns.sorted
+    }
+    assert(flagged(RobustZ("v", 2.0, approx = false)) == Seq(7))
+    assert(flagged(RobustZ("v", 2.0, approx = true)) == Seq(6, 7))
+    // together the exact MAD serves both, like the shared median
+    assert(flagged(RobustZ("v", 2.0, approx = false),
+      RobustZ("v", 2.0, approx = true)) == Seq(7, 7))
+  }
 }
